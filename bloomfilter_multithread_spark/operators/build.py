@@ -34,6 +34,7 @@ Scale notes (100 TB / 10^12 turns, 1000 executors):
 from __future__ import annotations
 
 import math
+import uuid
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -42,7 +43,6 @@ import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType
 
 from ..sketches import MergeableSketch, sketch_class
 from ..sketches.base import merge_all
@@ -71,33 +71,40 @@ class SketchSpec:
         return sketch_class(self.kind).create(**self.params)
 
 
+def _key_hash(c: Column, pre_hashed: bool) -> Column:
+    """The int64 key hash that both the build and the probe run. A null
+    key hashes to null, so the build drops it and the probe answers
+    absent for it (``xxhash64(NULL)`` is its seed, 42, not null)."""
+    if pre_hashed:
+        return c.cast("long")
+    # JVM-side hashing: string/num key -> int64, stays in codegen
+    return F.when(c.isNotNull(), F.xxhash64(c))
+
+
 def _input_col(spec: SketchSpec) -> Column:
     c = F.expr(spec.column) if isinstance(spec.column, str) else spec.column
-    if spec.is_value:
-        return c.cast("double").alias(spec.name)
-    if spec.pre_hashed:
-        return c.cast("long").alias(spec.name)
-    # JVM-side hashing: string/num key -> int64, stays in codegen
-    return F.xxhash64(c).alias(spec.name)
+    return c.cast("double") if spec.is_value else _key_hash(c, spec.pre_hashed)
 
 
 _PARTIAL_SCHEMA = pa.schema(
     [
+        ("group_key", pa.string()),
         ("spec_name", pa.string()),
         ("partition_id", pa.int32()),
         ("n_rows", pa.int64()),
         ("sketch", pa.binary()),
     ]
 )
-PARTIAL_DDL = "spec_name string, partition_id int, n_rows long, sketch binary"
+PARTIAL_DDL = ("group_key string, spec_name string, partition_id int, n_rows long, "
+               "sketch binary")
 
 
 def _dedup_projection(specs: list[SketchSpec]) -> tuple[list[Column], dict[str, int]]:
     """Projection with each distinct input expression shipped ONCE, plus a
-    spec-name -> column-index map. Two specs share a column iff their
-    column is the same SQL string and they agree on value-vs-hash and
-    pre_hashed (so the projected expression is identical). Column objects
-    never dedup (no stable identity). The headline 5-sketch build ships
+    spec-name -> column-index map. Two specs share a column iff they name
+    the same input (the same SQL string, or the same ``Column`` object)
+    and agree on value-vs-hash and pre_hashed, so the projected
+    expression is identical. The headline 5-sketch build ships
     ``length(text)`` for BOTH kll and t-digest — as separate columns that
     is 8 of the 40 bytes/row crossing the exchange + Arrow boundary for
     no information (measured ~7% of the drain wall at 22M rows)."""
@@ -105,11 +112,8 @@ def _dedup_projection(specs: list[SketchSpec]) -> tuple[list[Column], dict[str, 
     index: dict[str, int] = {}
     seen: dict[tuple, int] = {}
     for s in specs:
-        key = (
-            (s.column, s.is_value, s.pre_hashed)
-            if isinstance(s.column, str)
-            else (id(s.column),)
-        )
+        source = s.column if isinstance(s.column, str) else id(s.column)
+        key = (source, s.is_value, s.pre_hashed)
         if key in seen:
             index[s.name] = seen[key]
             continue
@@ -118,14 +122,54 @@ def _dedup_projection(specs: list[SketchSpec]) -> tuple[list[Column], dict[str, 
     return cols, index
 
 
+def _update(sketches: list[MergeableSketch], inputs: list[tuple[bool, int]],
+            batch: pa.RecordBatch) -> None:
+    """Feed one Arrow batch to each sketch from its (is_value, column)
+    input. Nulls are dropped on the Arrow side, so a hash column reaches
+    numpy as int64 (never through float64, which loses hash bits)."""
+    for sk, (is_value, ci) in zip(sketches, inputs):
+        col = batch.column(ci)
+        if col.null_count:
+            col = col.drop_null()
+        arr = col.to_numpy(zero_copy_only=False)
+        if is_value:
+            sk.update_values(arr[~np.isnan(arr)])
+        else:
+            sk.update_hashes(arr)
+
+
+def _group_slices(batch: pa.RecordBatch) -> Iterator[tuple[str, pa.RecordBatch]]:
+    """(key, rows) for each group of ``batch``, keyed by its last column,
+    rows in input order; null keys are dropped. One stable sort of the
+    dictionary codes per batch, whatever the number of groups."""
+    keys = batch.column(batch.num_columns - 1)
+    if keys.null_count:
+        batch = batch.filter(keys.is_valid())
+        keys = batch.column(batch.num_columns - 1)
+    enc = keys.dictionary_encode()
+    codes = enc.indices.to_numpy()
+    rows = batch.take(np.argsort(codes, kind="stable"))
+    ends = np.cumsum(np.bincount(codes, minlength=len(enc.dictionary)))
+    start = 0
+    for key, end in zip(enc.dictionary.to_pylist(), ends.tolist()):
+        yield key, rows.slice(start, end - start)
+        start = end
+
+
 def build_partials(df: DataFrame, specs: list[SketchSpec],
                    salt_partitions: int | None = None,
                    route_for: str | None = None,
-                   route_partitions: int | None = None) -> DataFrame:
+                   route_partitions: int | None = None,
+                   group_col: str | None = None) -> DataFrame:
     """One vectorized pass over ``df`` building every spec's partial
-    per Spark partition. Returns a tiny DataFrame (P x len(specs) rows)
-    of serialized partials with per-partition lineage (partition_id,
-    n_rows) — the checkpointable unit for resumable builds.
+    per Spark partition. Returns a tiny DataFrame of serialized partials
+    (``PARTIAL_DDL``) with per-partition lineage (partition_id, n_rows) —
+    the checkpointable unit for resumable builds.
+
+    Without ``group_col`` each partition emits one row per spec, even
+    when it is empty, with a null ``group_key``. With ``group_col`` it
+    emits one row per (group, spec) for each group present in it, the
+    key carried as its string form; rows with a null key are dropped.
 
     ``route_for`` names a BLOCKED spec — a bloom with ``block_bits`` or a
     cbf with ``block_slots`` (both pick the block from the hash's top
@@ -140,6 +184,9 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
     at m >= 2^27).
     """
     cols, col_index = _dedup_projection(specs)
+    if group_col is not None:
+        # the key rides last, so the spec column indices do not move
+        cols.append(F.col(group_col).cast("string").alias("_g"))
     proj = df.select(*cols)
     if route_for:
         spec = next(s for s in specs if s.name == route_for)
@@ -162,65 +209,64 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
         # df.repartition(n) ahead of the explode measured 4.35x on a
         # role-skewed fixture where projection-level salting was noise.
         proj = proj.repartition(salt_partitions)
-    spec_list = [(s.name, s.kind, dict(s.params), s.is_value, col_index[s.name])
-                 for s in specs]
+    names = [s.name for s in specs]
+    makers = [(s.kind, dict(s.params)) for s in specs]
+    inputs = [(s.is_value, col_index[s.name]) for s in specs]
+    slices = _group_slices if group_col is not None else (lambda b: [(None, b)])
+
+    def fresh() -> list[MergeableSketch]:
+        return [sketch_class(kind).create(**params) for kind, params in makers]
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sketches = {name: sketch_class(kind).create(**params)
-                    for name, kind, params, _, _ in spec_list}
-        n = 0
+        # group key -> one sketch per spec; an ungrouped partition has the
+        # one key None and reports it even when it is empty
+        acc = {} if group_col is not None else {None: fresh()}
+        n_rows = dict.fromkeys(acc, 0)
         for batch in batches:
-            n += batch.num_rows
-            for name, _, _, is_value, ci in spec_list:
-                col = batch.column(ci)
-                arr = col.to_numpy(zero_copy_only=False)
-                if is_value:
-                    sketches[name].update_values(arr[~np.isnan(arr)] if arr.dtype.kind == "f" else arr)
-                else:
-                    # drop nulls (xxhash64 of null is null -> NaN after to_numpy)
-                    if col.null_count:
-                        arr = arr[~np.isnan(arr)].astype(np.int64)
-                    else:
-                        arr = arr.astype(np.int64, copy=False)
-                    sketches[name].update_hashes(arr)
-        pid = TaskContext.get().partitionId()
-        yield pa.RecordBatch.from_pydict(
-            {
-                "spec_name": [name for name, *_ in spec_list],
-                "partition_id": [pid] * len(spec_list),
-                "n_rows": [n] * len(spec_list),
-                "sketch": [sketches[name].to_bytes() for name, *_ in spec_list],
-            },
-            schema=_PARTIAL_SCHEMA,
-        )
+            for key, rows in slices(batch):
+                if key not in acc:
+                    acc[key], n_rows[key] = fresh(), 0
+                n_rows[key] += rows.num_rows
+                _update(acc[key], inputs, rows)
+        if acc:
+            yield _partials_batch([(g, name) for g in acc for name in names],
+                                  [n_rows[g] for g in acc for _ in names],
+                                  [sk for sks in acc.values() for sk in sks])
 
     return proj.mapInArrow(build, schema=PARTIAL_DDL)
 
 
+def _partials_batch(keys: list[tuple[str | None, str]], n_rows: list[int],
+                    sketches: list[MergeableSketch]) -> pa.RecordBatch:
+    """One ``PARTIAL_DDL`` row per (group_key, spec_name) key, tagged with
+    this task's partition id."""
+    return pa.RecordBatch.from_pydict(
+        {
+            "group_key": [g for g, _ in keys],
+            "spec_name": [name for _, name in keys],
+            "partition_id": [TaskContext.get().partitionId()] * len(keys),
+            "n_rows": n_rows,
+            "sketch": [sk.to_bytes() for sk in sketches],
+        },
+        schema=_PARTIAL_SCHEMA,
+    )
+
+
 def _merge_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Arrow-side combiner: folds all (spec_name, sketch) rows in this
-    partition into one row per spec."""
-    acc: dict[str, MergeableSketch] = {}
-    n_rows: dict[str, int] = {}
+    """Arrow-side combiner: folds all partial rows in this partition into
+    one row per (group_key, spec_name)."""
+    acc: dict[tuple[str | None, str], MergeableSketch] = {}
+    n_rows: dict[tuple[str | None, str], int] = {}
     for batch in batches:
-        names = batch.column(0).to_pylist()
-        counts = batch.column(2).to_pylist()
-        blobs = batch.column(3)
-        for i, name in enumerate(names):
+        keys = zip(batch.column("group_key").to_pylist(), batch.column("spec_name").to_pylist())
+        counts = batch.column("n_rows").to_pylist()
+        blobs = batch.column("sketch")
+        for i, key in enumerate(keys):
             sk = MergeableSketch.from_bytes(blobs[i].as_py())
-            acc[name] = sk if name not in acc else acc[name].merge(sk)
-            n_rows[name] = n_rows.get(name, 0) + (counts[i] or 0)
+            acc[key] = sk if key not in acc else acc[key].merge(sk)
+            n_rows[key] = n_rows.get(key, 0) + (counts[i] or 0)
     if acc:
-        pid = TaskContext.get().partitionId()
-        yield pa.RecordBatch.from_pydict(
-            {
-                "spec_name": list(acc),
-                "partition_id": [pid] * len(acc),
-                "n_rows": [n_rows[k] for k in acc],
-                "sketch": [acc[k].to_bytes() for k in acc],
-            },
-            schema=_PARTIAL_SCHEMA,
-        )
+        yield _partials_batch(list(acc), [n_rows[k] for k in acc], list(acc.values()))
 
 
 def tree_merge(partials: DataFrame, fanout: int = 16) -> dict[str, MergeableSketch]:
@@ -245,12 +291,16 @@ def tree_merge(partials: DataFrame, fanout: int = 16) -> dict[str, MergeableSket
 
 
 def _merge_levels(partials: DataFrame, fanout: int = 16) -> DataFrame:
-    level1 = (
-        partials.repartition(fanout, F.col("spec_name"),
-                             F.pmod(F.col("partition_id"), F.lit(fanout)))
-        .mapInArrow(_merge_batches, PARTIAL_DDL)
-    )
-    return level1.repartition(F.col("spec_name")).mapInArrow(_merge_batches, PARTIAL_DDL)
+    """Fold partials to one row per (group_key, spec_name). The spread
+    level runs only for ``fanout > 1``: a grouped build's keys already
+    spread its merge."""
+    key = [F.col("group_key"), F.col("spec_name")]
+    if fanout > 1:
+        partials = (
+            partials.repartition(fanout, *key, F.pmod(F.col("partition_id"), F.lit(fanout)))
+            .mapInArrow(_merge_batches, PARTIAL_DDL)
+        )
+    return partials.repartition(*key).mapInArrow(_merge_batches, PARTIAL_DDL)
 
 
 def build_and_persist(df: DataFrame, specs: list[SketchSpec], path: str,
@@ -341,56 +391,57 @@ def _cached_from_bytes(token: str, blob: bytes) -> MergeableSketch:
     return sk
 
 
+# sketch method -> (Spark return type, Arrow return type)
+_PROBE_TYPES = {"probe_hashes": ("boolean", pa.bool_()),
+                "estimate_hashes": ("long", pa.int64())}
+
+
+def _probe_udf(spark, sketch, method: str):
+    """Arrow UDF mapping a column of int64 key hashes to ``sketch.<method>``
+    of each: the blob is broadcast once and deserialized once per worker
+    (``_cached_from_bytes``). A null hash (null key) answers as absent:
+    False, or an estimate of 0."""
+    blob = sketch.to_bytes() if isinstance(sketch, MergeableSketch) else bytes(sketch)
+    bc = spark.sparkContext.broadcast(blob)
+    token = uuid.uuid4().hex
+    spark_type, arrow_type = _PROBE_TYPES[method]
+
+    @F.arrow_udf(spark_type)
+    def probe(h: pa.Array) -> pa.Array:
+        sk = _cached_from_bytes(token, bc.value)
+        out = getattr(sk, method)(h.fill_null(0).to_numpy())
+        if h.null_count:
+            out = np.where(h.is_valid().to_numpy(zero_copy_only=False), out, 0)
+        return pa.array(out, type=arrow_type)
+
+    return probe
+
+
 def with_might_contain(df: DataFrame, key: str | Column, sketch, out_col: str = "might_contain",
                        pre_hashed: bool = False) -> DataFrame:
     """Broadcast-probe: adds a boolean column testing key membership in a
     merged Bloom sketch — the analog of the reference query phase
     (SkmerSplitter.cpp:91-151) and of Spark's own runtime
-    BloomFilterMightContain. Zero false negatives by construction.
+    BloomFilterMightContain. Zero false negatives by construction; a null
+    key probes False.
 
     Map-side only: JVM xxhash64 -> Arrow batch -> numpy probe. No shuffle.
+    ``pre_hashed`` marks a key column that already carries the 64-bit
+    hash (e.g. the rolled k-mer kernel); it must match the build side's
+    ``SketchSpec(..., pre_hashed=True)`` so both run the identical hash.
     """
-    import uuid
-
-    blob = sketch.to_bytes() if isinstance(sketch, MergeableSketch) else bytes(sketch)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(blob)
-    token = uuid.uuid4().hex
-
-    @F.pandas_udf(BooleanType())
-    def probe(h):
-        import pandas as pd
-
-        sk = _cached_from_bytes(token, bc.value)
-        return pd.Series(sk.probe_hashes(h.to_numpy(dtype=np.int64, na_value=0)))
-
     key_col = F.expr(key) if isinstance(key, str) else key
-    # pre_hashed: the column already carries the 64-bit key hash (e.g.
-    # the rolled k-mer kernel) — must match the build side's
-    # SketchSpec(..., pre_hashed=True) so both run the identical hash
-    if not pre_hashed:
-        key_col = F.xxhash64(key_col)
-    return df.withColumn(out_col, probe(key_col))
+    probe = _probe_udf(df.sparkSession, sketch, "probe_hashes")
+    return df.withColumn(out_col, probe(_key_hash(key_col, pre_hashed)))
 
 
 def with_cms_estimate(df: DataFrame, key: str | Column, sketch, out_col: str = "cms_estimate",
                       ) -> DataFrame:
-    """Adds the count-min frequency estimate for each row's key (map-side)."""
-    import uuid
-
-    blob = sketch.to_bytes() if isinstance(sketch, MergeableSketch) else bytes(sketch)
-    bc = df.sparkSession.sparkContext.broadcast(blob)
-    token = uuid.uuid4().hex
-
-    @F.pandas_udf(LongType())
-    def est(h):
-        import pandas as pd
-
-        sk = _cached_from_bytes(token, bc.value)
-        return pd.Series(sk.estimate_hashes(h.to_numpy(dtype=np.int64, na_value=0)))
-
+    """Adds the count-min frequency estimate for each row's key (map-side);
+    a null key estimates 0."""
     key_col = F.expr(key) if isinstance(key, str) else key
-    return df.withColumn(out_col, est(F.xxhash64(key_col)))
+    est = _probe_udf(df.sparkSession, sketch, "estimate_hashes")
+    return df.withColumn(out_col, est(_key_hash(key_col, False)))
 
 
 def register_probe_udf(spark, sketch, name: str = "might_contain_udf") -> str:
@@ -403,18 +454,5 @@ def register_probe_udf(spark, sketch, name: str = "might_contain_udf") -> str:
     worker-cached deserialization, Arrow-batched vectorized probe,
     map-side only — just exposed through the catalog instead of the
     DataFrame DSL.  Returns the registered name."""
-    import uuid
-
-    blob = sketch.to_bytes() if isinstance(sketch, MergeableSketch) else bytes(sketch)
-    bc = spark.sparkContext.broadcast(blob)
-    token = uuid.uuid4().hex
-
-    @F.pandas_udf(BooleanType())
-    def probe(h):
-        import pandas as pd
-
-        sk = _cached_from_bytes(token, bc.value)
-        return pd.Series(sk.probe_hashes(h.to_numpy(dtype=np.int64, na_value=0)))
-
-    spark.udf.register(name, probe)
+    spark.udf.register(name, _probe_udf(spark, sketch, "probe_hashes"))
     return name

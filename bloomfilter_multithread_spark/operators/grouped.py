@@ -1,120 +1,33 @@
 """Sketches as PER-KEY aggregates — ``GROUP BY key, approx_agg(x)``.
 
-The global build (``build.py``) produces ONE sketch per spec; real
-engine workloads mostly want one per group ("latency t-digest per
-endpoint", "distinct users HLL per day"). The scale-correct shape is the
-same two-level combine Spark uses for any aggregate:
-
-  1. map-side partials: one ``mapInArrow`` pass; within a partition each
-     present group accumulates its own small sketch (numpy masks per
-     group, Arrow-batched — no Python loop over rows). Emitted rows are
-     (group, spec, blob) — the map-side combine means the shuffle moves
-     at most |groups x partitions x specs| sketch blobs, never data rows.
-  2. reduce: ``applyInPandas`` per (group, spec) merging blobs with the
-     associative+commutative sketch merge — partition-count/order
-     invariant by the same argument as the global tree merge.
-
-Skew note: a single hot group's partials still fan in to one reduce
-task, but the reduce input is per-PARTITION partials (bounded by the map
-parallelism), not rows — the hot-key problem is capped at P blobs.
-
-High-cardinality caveat: map-side state is O(groups-per-partition x
-sketch size). For very high-cardinality keys pre-repartition by the
-group column so each partition sees few groups (the same advice as any
-hash aggregate); sketches with large fixed payloads (blocked Bloom)
-should use modest params per group.
+The grouped build is the global build (``build.py``) with a group key:
+the same one-pass ``mapInArrow`` kernel splits each Arrow batch by key
+(one stable sort of the batch's dictionary codes) and emits one partial
+per (group, spec) present in the partition; the same ``_merge_batches``
+then folds the partials, exchanged on (group_key, spec_name). The
+shuffle moves at most |groups x partitions x specs| sketch blobs, never
+data rows. The global build's spread level is skipped: the group keys
+already spread the merge. A hot group still fans in to one merge task,
+but its input is capped at one partial per map partition.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..sketches import MergeableSketch, sketch_class
-from ..sketches.base import merge_all
-from .build import SketchSpec, _dedup_projection
-
-GROUPED_PARTIAL_DDL = "group_key string, spec_name string, n_rows long, sketch binary"
-_GROUPED_SCHEMA = pa.schema(
-    [
-        ("group_key", pa.string()),
-        ("spec_name", pa.string()),
-        ("n_rows", pa.int64()),
-        ("sketch", pa.binary()),
-    ]
-)
+from ..sketches import MergeableSketch
+from .build import SketchSpec, _merge_levels, build_partials
 
 
 def build_sketches_grouped(
     df: DataFrame, group_col: str, specs: list[SketchSpec]
 ) -> DataFrame:
     """One merged sketch per (group, spec). The group key is carried as
-    its string form (cast both when joining back). Returns a DataFrame
-    (group_key, spec_name, n_rows, sketch) with exactly one row per
-    (group, spec)."""
-    # each distinct input expression ships once (see build._dedup_projection)
-    cols, col_index = _dedup_projection(specs)
-    proj = df.select(F.col(group_col).cast("string").alias("_g"), *cols)
-    spec_list = [(s.name, s.kind, dict(s.params), s.is_value, col_index[s.name])
-                 for s in specs]
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[tuple[str, str], MergeableSketch] = {}
-        nrows: dict[tuple[str, str], int] = {}
-        for batch in batches:
-            g = np.asarray(batch.column(0).to_pylist(), dtype=object)
-            for name, kind, params, is_value, ci in spec_list:
-                col = batch.column(ci + 1)
-                arr = col.to_numpy(zero_copy_only=False)
-                for grp in pd.unique(g):
-                    if grp is None:
-                        continue
-                    mask = g == grp
-                    vals = arr[mask]
-                    if vals.dtype.kind == "f":
-                        vals = vals[~np.isnan(vals)]
-                    key = (grp, name)
-                    if key not in acc:
-                        acc[key] = sketch_class(kind).create(**params)
-                        nrows[key] = 0
-                    nrows[key] += int(mask.sum())
-                    if is_value:
-                        acc[key].update_values(vals)
-                    else:
-                        acc[key].update_hashes(vals.astype(np.int64, copy=False))
-        if acc:
-            keys = list(acc)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "group_key": [k[0] for k in keys],
-                    "spec_name": [k[1] for k in keys],
-                    "n_rows": [nrows[k] for k in keys],
-                    "sketch": [acc[k].to_bytes() for k in keys],
-                },
-                schema=_GROUPED_SCHEMA,
-            )
-
-    partials = proj.mapInArrow(build, schema=GROUPED_PARTIAL_DDL)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = merge_all([bytes(b) for b in pdf["sketch"]])
-        return pd.DataFrame(
-            {
-                "group_key": [pdf["group_key"].iloc[0]],
-                "spec_name": [pdf["spec_name"].iloc[0]],
-                "n_rows": [int(pdf["n_rows"].sum())],
-                "sketch": [merged.to_bytes()],
-            }
-        )
-
-    return partials.groupBy("group_key", "spec_name").applyInPandas(
-        merge_group, schema=GROUPED_PARTIAL_DDL
-    )
+    its string form (cast both when joining back); null keys are dropped.
+    Returns a DataFrame (group_key, spec_name, n_rows, sketch) with
+    exactly one row per (group, spec)."""
+    return _merge_levels(build_partials(df, specs, group_col=group_col), fanout=1) \
+        .select("group_key", "spec_name", "n_rows", "sketch")
 
 
 def collect_grouped(merged: DataFrame) -> dict[tuple[str, str], MergeableSketch]:

@@ -159,3 +159,44 @@ def test_grouped_shared_column_identity(spark, synth):
             assert shared[(g, "k")].quantile(q) == solo_k[(g, "k")].quantile(q)
             assert shared[(g, "t")].quantile(q) == pytest.approx(
                 solo_t[(g, "t")].quantile(q))
+
+
+
+def test_grouped_blobs_match_independent_builds(spark):
+    """About 2,000 groups plus null group keys over four partitions, each
+    partition holding most groups: every group's Bloom, HLL and CMS blob
+    equals the same sketch built over that group's rows alone. Those
+    blobs do not depend on insert or merge order, so the reference is
+    built locally from the group's key hashes, and pinned to
+    ``build_sketches(df.where(grp == g))`` for a few groups."""
+    from pyspark.sql import functions as F
+
+    from bloomfilter_multithread_spark.operators.build import build_sketches
+
+    specs = [
+        SketchSpec("b", "bloom", "key", {"m_bits": 1 << 10, "k": 3}),
+        SketchSpec("h", "hll", "uid", {"p": 8}),
+        SketchSpec("c", "cms", "key", {"width": 64, "depth": 3}),
+    ]
+    rng = np.random.default_rng(4)
+    n_groups, n_rows = 2000, 20_000
+    grp = rng.integers(0, n_groups + 1, n_rows)  # n_groups -> null key
+    rows = [(None if g == n_groups else f"g{g}", f"k{k}", int(u))
+            for g, k, u in zip(grp, rng.integers(0, 500, n_rows), rng.integers(0, 50, n_rows))]
+    df = spark.createDataFrame(rows, "grp string, key string, uid long").repartition(4).cache()
+
+    got = {(r["group_key"], r["spec_name"]): (r["n_rows"], bytes(r["sketch"]))
+           for r in build_sketches_grouped(df, "grp", specs).collect()}
+    hashed = df.where(F.col("grp").isNotNull()).select(
+        "grp", F.xxhash64("key").alias("key"), F.xxhash64("uid").alias("uid")).toPandas()
+    groups = hashed.groupby("grp")
+    assert len(got) == len(specs) * groups.ngroups > 3 * 1900
+    for g, rows in groups:
+        for s in specs:
+            sk = s.make()
+            sk.update_hashes(rows[s.column].to_numpy(dtype=np.int64))
+            assert got[(g, s.name)] == (len(rows), sk.to_bytes()), (g, s.name)
+    for g in ("g0", "g999", "g1999"):
+        solo = build_sketches(df.where(F.col("grp") == g), specs)
+        for s in specs:
+            assert got[(g, s.name)][1] == solo[s.name].to_bytes(), (g, s.name)

@@ -29,6 +29,12 @@ from bloomfilter_multithread_spark.operators.build import (
 from bloomfilter_multithread_spark.sources.transcripts import synth_query_set
 
 
+def _random_hashes(n: int) -> list[int]:
+    """``n`` distinct full-width int64 keys (float64 cannot hold them)."""
+    keys = np.random.default_rng(5).integers(-(2 ** 63), 2 ** 63 - 1, n, dtype=np.int64)
+    return [int(k) for k in np.unique(keys)]
+
+
 @pytest.fixture(scope="module")
 def built(spark, corpus):
     specs = [
@@ -135,15 +141,51 @@ class TestBuildMergeProbe:
         sk = build_sketches(corpus, specs)
         exact = corpus.where("tool is not null").select("tool").distinct().count()
         assert abs(sk["h"].estimate() - exact) / max(exact, 1) < 0.1
+        # exact count: one key plus 20 nulls is ONE distinct key, and a
+        # null key probes absent (xxhash64(NULL) is 42, not null)
+        one = spark.createDataFrame([("a",)] + [(None,)] * 20, "k string").coalesce(1)
+        sk = build_sketches(one, [
+            SketchSpec("h", "hll", "k", {"p": 12}),
+            SketchSpec("b", "bloom", "k", {"m_bits": 1 << 12, "k": 3}),
+            SketchSpec("c", "cms", "k", {"width": 1 << 8, "depth": 3}),
+        ])
+        assert round(sk["h"].estimate()) == 1
+        probed = with_cms_estimate(with_might_contain(one, "k", sk["b"]), "k", sk["c"])
+        got = {(r["k"], r["might_contain"], r["cms_estimate"]) for r in probed.collect()}
+        assert got == {("a", True, 1), (None, False, 0)}
 
-    def test_dedup_projection_shares_identical_exprs(self):
-        """Specs over the same SQL string + same hash/value treatment ride
-        ONE projected column (the headline build ships length(text) once
-        for kll AND t-digest — 8 of 40 bytes/row across the exchange +
-        Arrow boundary saved); differing pre_hashed/value treatment or
-        Column objects never share."""
+    def test_pre_hashed_build_keeps_keys_beside_a_null(self, spark):
+        """A null in a pre_hashed batch must not send the other 64-bit
+        keys through float64 (which drops their low bits): every exact
+        key lands in the Bloom."""
+        keys = _random_hashes(50)
+        df = spark.createDataFrame([(k,) for k in keys] + [(None,)], "h long").coalesce(1)
+        bloom = build_sketches(df, [SketchSpec("b", "bloom", "h", {"m_bits": 1 << 16, "k": 3},
+                                               pre_hashed=True)])["b"]
+        assert bloom.probe_hashes(np.array(keys, dtype=np.int64)).all()
+
+    def test_pre_hashed_probe_reads_keys_beside_a_null(self, spark):
+        """The probe reads a pre_hashed key column with a null as exact
+        int64: all 50 present keys hit, the null key probes False."""
+        keys = _random_hashes(50)
+        spec = SketchSpec("b", "bloom", "h", {"m_bits": 1 << 16, "k": 3}, pre_hashed=True)
+        bloom = spec.make()
+        bloom.update_hashes(np.array(keys, dtype=np.int64))
+        q = spark.createDataFrame([(k,) for k in keys] + [(None,)], "h long").coalesce(1)
+        hits = {r["h"]: r["might_contain"]
+                for r in with_might_contain(q, "h", bloom, pre_hashed=True).collect()}
+        assert [hits[k] for k in keys] == [True] * len(keys)
+        assert hits[None] is False
+
+    def test_dedup_projection_shares_identical_exprs(self, spark):
+        """Specs over the same input (SQL string or Column object) + same
+        hash/value treatment ride ONE projected column (the headline
+        build ships length(text) once for kll AND t-digest — 8 of 40
+        bytes/row across the exchange + Arrow boundary saved); differing
+        pre_hashed/value treatment or distinct Column objects never share."""
         from bloomfilter_multithread_spark.operators.build import _dedup_projection
 
+        text = F.col("text")
         specs = [
             SketchSpec("b", "bloom", "text", {"m_bits": 1 << 16, "k": 3}),
             SketchSpec("h", "hll", "conv_id", {"p": 12}),
@@ -152,14 +194,27 @@ class TestBuildMergeProbe:
             # same string as 'b' but pre-hashed -> different expression
             SketchSpec("b2", "bloom", "text", {"m_bits": 1 << 16, "k": 3},
                        pre_hashed=True),
-            # Column objects have no stable identity -> never shared
-            SketchSpec("b3", "bloom", F.col("text"), {"m_bits": 1 << 16, "k": 3}),
+            # a distinct Column object -> its own column
+            SketchSpec("b3", "bloom", text, {"m_bits": 1 << 16, "k": 3}),
+            # the same Column object: shared when hashed too, not as values
+            SketchSpec("h3", "hll", text, {"p": 12}),
+            SketchSpec("k3", "kll", text, {"k": 200}),
         ]
         cols, index = _dedup_projection(specs)
-        assert len(cols) == 5  # b, h, kll/td shared, b2, b3
-        assert index["k"] == index["t"]
-        assert index["b"] != index["b2"] != index["b3"]
-        assert sorted(set(index.values())) == list(range(5))
+        assert len(cols) == 6  # b, h, kll/td shared, b2, b3/h3 shared, k3
+        assert index["k"] == index["t"] and index["b3"] == index["h3"]
+        assert index["b"] != index["b2"] != index["b3"] != index["k3"]
+        assert sorted(set(index.values())) == list(range(6))
+
+    def test_dedup_projection_reused_column_keeps_each_treatment(self, spark):
+        """One Column object reused by a kll spec and an hll spec: the hll
+        hashes its keys instead of sharing the kll's cast to double."""
+        v = F.col("v")
+        df = spark.range(100).select(F.col("id").alias("v"))
+        sk = build_sketches(df, [SketchSpec("k", "kll", v, {"k": 200}),
+                                 SketchSpec("h", "hll", v, {"p": 12})])
+        assert abs(sk["h"].estimate() - 100) <= 100 * 3 * sk["h"].rel_error_bound()
+        assert 45 <= sk["k"].quantile(0.5) <= 55
 
     def test_dedup_projection_build_identity(self, spark, corpus):
         """Sketches built through a shared projected column are identical
