@@ -25,7 +25,10 @@ Scale notes (100 TB / 10^12 turns, 1000 executors):
 - the scan+hash+partial-build stage is embarrassingly parallel, no shuffle
   at all unless ``salt_partitions`` is requested;
 - partials are fixed-size (sketch bytes, KB-MB each), so the merge moves
-  O(P * sketch_bytes) — independent of row count; treeAggregate keeps the
+  O(P * sketch_bytes) — independent of row count. That bound is known
+  from the spec params before the job runs, and it picks the merge plan
+  (``merge_plan``): a small total is collected and folded on the driver,
+  a large one goes through the executor tree merge, which keeps the
   driver from becoming the fan-in bottleneck at large P;
 - probe broadcasts one merged sketch and adds a column map-side — no
   shuffle, no join.
@@ -177,19 +180,32 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
     exchanged on that spec's hash-block id, so every partition's partial
     touches only its own cache-resident blocks —
     the reference's `hmin % q` minimizer routing (SkmerExtractor.cpp:164)
-    as an explicit Spark repartition. The merged result is identical with
-    or without routing (merge is associative+commutative; property-tested);
-    routing exists purely to shrink the per-task working set from m_bits
-    to ~m_bits/P (measured: the unrouted build is memory-bandwidth-bound
-    at m >= 2^27).
+    as an explicit Spark repartition. Routing exists purely to shrink the
+    per-task working set from m_bits to ~m_bits/P (measured: the unrouted
+    build is memory-bandwidth-bound at m >= 2^27).
+
+    However the rows are partitioned (routed, salted or as they come) and
+    however the partials are merged, a ``merge_exact`` kind merges to the
+    same bytes; KLL, t-digest and Misra-Gries merge to sketches within
+    their stated bounds (tests/test_merge_invariance.py).
+
+    An ungrouped build's sketch column carries the specs'
+    ``wire_bytes_bound`` totals in its metadata, for ``merge_plan``.
+    Duplicate spec names, and a ``route_for`` that names no spec, raise
+    ``ValueError``.
     """
+    names = [s.name for s in specs]
+    if len(set(names)) != len(names):
+        raise ValueError(f"duplicate spec names in {names}")
+    if route_for is not None and route_for not in names:
+        raise ValueError(f"route_for={route_for!r} names no spec of {names}")
     cols, col_index = _dedup_projection(specs)
     if group_col is not None:
         # the key rides last, so the spec column indices do not move
         cols.append(F.col(group_col).cast("string").alias("_g"))
     proj = df.select(*cols)
     if route_for:
-        spec = next(s for s in specs if s.name == route_for)
+        spec = specs[names.index(route_for)]
         bb = int(spec.params.get("block_bits", 0) or spec.params.get("block_slots", 0))
         mb = int(spec.params.get("m_bits", 0) or spec.params.get("m_slots", 0))
         if not bb or not mb or mb % bb:
@@ -209,7 +225,6 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
         # df.repartition(n) ahead of the explode measured 4.35x on a
         # role-skewed fixture where projection-level salting was noise.
         proj = proj.repartition(salt_partitions)
-    names = [s.name for s in specs]
     makers = [(s.kind, dict(s.params)) for s in specs]
     inputs = [(s.is_value, col_index[s.name]) for s in specs]
     slices = _group_slices if group_col is not None else (lambda b: [(None, b)])
@@ -231,20 +246,25 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
         if acc:
             yield _partials_batch([(g, name) for g in acc for name in names],
                                   [n_rows[g] for g in acc for _ in names],
-                                  [sk for sks in acc.values() for sk in sks])
+                                  [sk for sks in acc.values() for sk in sks],
+                                  TaskContext.get().partitionId())
 
-    return proj.mapInArrow(build, schema=PARTIAL_DDL)
+    partials = proj.mapInArrow(build, schema=PARTIAL_DDL)
+    if group_col is not None:
+        return partials
+    per_partition, once = partial_wire_bytes(specs, route_for)
+    return partials.withMetadata("sketch", {"wire_bytes_per_partition": per_partition,
+                                            "wire_bytes_once": once})
 
 
 def _partials_batch(keys: list[tuple[str | None, str]], n_rows: list[int],
-                    sketches: list[MergeableSketch]) -> pa.RecordBatch:
-    """One ``PARTIAL_DDL`` row per (group_key, spec_name) key, tagged with
-    this task's partition id."""
+                    sketches: list[MergeableSketch], partition_id: int) -> pa.RecordBatch:
+    """One ``PARTIAL_DDL`` row per (group_key, spec_name) key."""
     return pa.RecordBatch.from_pydict(
         {
             "group_key": [g for g, _ in keys],
             "spec_name": [name for _, name in keys],
-            "partition_id": [TaskContext.get().partitionId()] * len(keys),
+            "partition_id": [partition_id] * len(keys),
             "n_rows": n_rows,
             "sketch": [sk.to_bytes() for sk in sketches],
         },
@@ -252,9 +272,10 @@ def _partials_batch(keys: list[tuple[str | None, str]], n_rows: list[int],
     )
 
 
-def _merge_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Arrow-side combiner: folds all partial rows in this partition into
-    one row per (group_key, spec_name)."""
+def _merge_batches(batches: Iterator[pa.RecordBatch],
+                   partition_id: int) -> Iterator[pa.RecordBatch]:
+    """Arrow-side combiner: folds all partial rows of ``batches`` into
+    one row per (group_key, spec_name), in row order."""
     acc: dict[tuple[str | None, str], MergeableSketch] = {}
     n_rows: dict[tuple[str | None, str], int] = {}
     for batch in batches:
@@ -266,57 +287,171 @@ def _merge_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch
             acc[key] = sk if key not in acc else acc[key].merge(sk)
             n_rows[key] = n_rows.get(key, 0) + (counts[i] or 0)
     if acc:
-        yield _partials_batch(list(acc), [n_rows[k] for k in acc], list(acc.values()))
+        yield _partials_batch(list(acc), [n_rows[k] for k in acc], list(acc.values()),
+                              partition_id)
 
 
-def tree_merge(partials: DataFrame, fanout: int = 16) -> dict[str, MergeableSketch]:
-    """Executor-side two-level tree merge of partial sketches — the merge
+def _merge_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    return _merge_batches(batches, TaskContext.get().partitionId())
+
+
+# ------------------------------------------------------------ merge plan
+
+# The largest partial total (by ``wire_bytes_bound``) that is collected
+# and folded on the driver instead of merged on the executors. The
+# executor merge costs two shuffles and ~fanout + shuffle-partitions
+# Python tasks whatever the bytes; the driver fold costs one Arrow
+# collect and a serial fold. On 4 cores the driver fold beat both
+# executor shapes from 4 MiB to 80 MiB of partials (CHANGES.md); the
+# cut-off stays below the m = 2^29 (64 MiB) Bloom builds, whose spread
+# level was measured to scale on 32 cores.
+DRIVER_FOLD_MAX_BYTES = 32 << 20
+# the spread level's fanout when the plan is left to "auto"
+SPREAD_FANOUT = 16
+
+
+def partial_wire_bytes(specs: list[SketchSpec],
+                       route_for: str | None = None) -> tuple[int, int]:
+    """Upper bounds, fixed by the spec params whatever the rows, on the
+    partials' wire bytes: (per partition, once in total), so that P
+    partitions' partials take at most ``once + P * per_partition``. A
+    routed spec's partials are block-disjoint, so its bound counts once
+    (its P envelope headers, ~50 B each, are left out)."""
+    per_partition = once = 0
+    for s in specs:
+        b = sketch_class(s.kind).wire_bytes_bound(**s.params)
+        if s.name == route_for:
+            once += b
+        else:
+            per_partition += b
+    return per_partition, once
+
+
+def merge_plan(wire_bytes: int | None, fanout: int | str = "auto") -> int | None:
+    """The merge for partials bounded by ``wire_bytes`` in total (None:
+    unknown): None folds them on the driver, an int runs the executor
+    merge with that fanout (``_merge_levels``). An explicit integer
+    ``fanout`` is always the executor merge; ``"auto"`` folds on the
+    driver up to ``DRIVER_FOLD_MAX_BYTES``, else spreads over
+    ``SPREAD_FANOUT``."""
+    if fanout == "auto":
+        small = wire_bytes is not None and wire_bytes <= DRIVER_FOLD_MAX_BYTES
+        return None if small else SPREAD_FANOUT
+    if isinstance(fanout, bool) or not isinstance(fanout, int) or fanout < 1:
+        raise ValueError(f"fanout must be 'auto' or an int >= 1, got {fanout!r}")
+    return fanout
+
+
+def _partition_count(df: DataFrame) -> int | None:
+    """``df``'s partition count as far as its physical plan tells without
+    running a job, else None. With adaptive execution on, the count of
+    an exchange is an upper bound (coalescing only lowers it)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the initial plan, exchanges inserted
+    return _plan_partitions(plan)
+
+
+def _plan_partitions(node) -> int | None:
+    n = node.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    children = node.children()
+    kids = [children.apply(i) for i in range(children.size())]
+    name = node.getClass().getSimpleName()
+    if not kids:
+        # the leaves whose splits are known without a job: file splits
+        # (unless a subquery prunes them), driver-side rows, and a cache
+        # that is already filled
+        if name == "FileSourceScanExec" and "dynamicpruning" not in \
+                node.partitionFilters().toString().lower():
+            return node.inputRDD().getNumPartitions()
+        if name == "RDDScanExec":
+            return node.execute().getNumPartitions()
+        if name == "InMemoryTableScanExec":
+            cache = node.relation().cacheBuilder()
+            if cache.isCachedColumnBuffersLoaded():
+                return cache.cachedColumnBuffers().getNumPartitions()
+        return None
+    counts = [_plan_partitions(k) for k in kids]
+    if None in counts or (len(counts) > 1 and name != "UnionExec"):
+        return None
+    return sum(counts)
+
+
+def _plan_for(partials: DataFrame, fanout: int | str) -> int | None:
+    """``merge_plan`` for a ``build_partials`` result: its spec bounds
+    ride on the sketch column's metadata, P is its partition count. Other
+    partial frames (no metadata) take the executor merge."""
+    meta = partials.schema["sketch"].metadata
+    wire_bytes = None
+    if fanout == "auto" and "wire_bytes_per_partition" in meta:
+        p = _partition_count(partials)
+        if p is not None:
+            wire_bytes = meta["wire_bytes_once"] + p * meta["wire_bytes_per_partition"]
+    return merge_plan(wire_bytes, fanout)
+
+
+def tree_merge(partials: DataFrame, fanout: int | str = "auto") -> dict[str, MergeableSketch]:
+    """Merge partial sketches into one sketch per spec — the merge
     primitive the reference lacks (its q filters stay disjoint forever,
-    /root/reference/src/main.cpp:119-127).
+    main.cpp:119-127). ``merge_plan`` picks how:
 
-    Level 1 spreads each spec's P partials over ~``fanout`` tasks keyed by
-    (spec_name, partition_id % fanout) — the expensive part of a Bloom
-    merge (sparse-index scatter into the dense array) parallelizes here
-    instead of serializing in one task (measured 0.31 -> ~0.8+ scaling
-    efficiency on the bench job). Level 2 co-locates each spec's <=fanout
-    level-1 outputs and folds them to ONE row; dense Bloom partials stay
-    PACKED through this level (8x smaller, OR-without-unpack). The driver
-    collects exactly len(specs) rows — O(specs * sketch_bytes) ingest,
-    independent of P and row count.
-
-    At cluster scale pick fanout ~ sqrt(P) so both levels stay balanced.
+    - driver fold (``"auto"`` and a small bound): one collect of the P
+      partials, folded here; no shuffle and no merge task;
+    - executor merge (an integer ``fanout``, or ``"auto"`` and a large
+      bound), two levels. Level 1 spreads each spec's P partials over
+      ~``fanout`` tasks keyed by (spec_name, partition_id % fanout) — the
+      expensive part of a large Bloom merge (sparse-index scatter into
+      the dense array) parallelizes here instead of serializing in one
+      task (measured 0.31 -> ~0.8+ scaling efficiency on the bench job).
+      Level 2 co-locates each spec's <=fanout level-1 outputs and folds
+      them to ONE row; dense Bloom partials stay PACKED through this
+      level (8x smaller, OR-without-unpack). The driver collects exactly
+      len(specs) rows. At cluster scale pick fanout ~ sqrt(P) so both
+      levels stay balanced.
     """
-    rows = _merge_levels(partials, fanout).collect()
-    return merge_partials_local(rows)
+    plan = _plan_for(partials, fanout)
+    if plan is None:
+        return merge_partials_local(partials.toArrow().to_pylist())
+    return merge_partials_local(_merge_levels(partials, plan).collect())
 
 
-def _merge_levels(partials: DataFrame, fanout: int = 16) -> DataFrame:
-    """Fold partials to one row per (group_key, spec_name). The spread
-    level runs only for ``fanout > 1``: a grouped build's keys already
-    spread its merge."""
+def _merge_levels(partials: DataFrame, fanout: int) -> DataFrame:
+    """Fold partials on the executors to one row per (group_key,
+    spec_name). The spread level runs only for ``fanout > 1``: a grouped
+    build's keys already spread its merge."""
     key = [F.col("group_key"), F.col("spec_name")]
     if fanout > 1:
         partials = (
             partials.repartition(fanout, *key, F.pmod(F.col("partition_id"), F.lit(fanout)))
-            .mapInArrow(_merge_batches, PARTIAL_DDL)
+            .mapInArrow(_merge_task, PARTIAL_DDL)
         )
-    return partials.repartition(*key).mapInArrow(_merge_batches, PARTIAL_DDL)
+    return partials.repartition(*key).mapInArrow(_merge_task, PARTIAL_DDL)
 
 
 def build_and_persist(df: DataFrame, specs: list[SketchSpec], path: str,
-                      route_for: str | None = None, fanout: int = 16,
+                      route_for: str | None = None, fanout: int | str = "auto",
                       route_partitions: int | None = None) -> None:
-    """Cluster-side build: scan -> partials -> tree merge -> parquet state
-    at ``path`` — one row per spec, WRITTEN BY THE EXECUTORS. The driver
-    never ingests the merged blobs (at m = 2^29+ the py4j collect is
-    seconds of serial time a cluster job shouldn't pay); consumers load
-    exactly the specs they need via ``load_sketches``. This is the
-    scale-correct form of the reference's stubbed binary sink
-    (/root/reference/src/main.cpp:233-239)."""
-    _merge_levels(
-        build_partials(df, specs, route_for=route_for, route_partitions=route_partitions),
-        fanout,
-    ).write.mode("overwrite").parquet(path)
+    """Cluster-side build: scan -> partials -> merge -> parquet state at
+    ``path``, one ``PARTIAL_DDL`` row per spec; consumers load exactly the
+    specs they need via ``load_sketches``. The merge follows
+    ``merge_plan``: under the driver fold the driver merges the small
+    partials and writes the state in one task; under the executor merge
+    the executors write it and the driver never ingests the merged blobs
+    (at m = 2^29+ the py4j collect is seconds of serial time a cluster
+    job shouldn't pay). This is the scale-correct form of the reference's
+    stubbed binary sink (main.cpp:233-239)."""
+    partials = build_partials(df, specs, route_for=route_for, route_partitions=route_partitions)
+    plan = _plan_for(partials, fanout)
+    if plan is None:
+        # the executors' combiner, run here over the collected partials
+        folded = _merge_batches(partials.toArrow().to_batches(), 0)
+        table = pa.Table.from_batches(list(folded), schema=_PARTIAL_SCHEMA)
+        state = df.sparkSession.createDataFrame(table).coalesce(1)
+    else:
+        state = _merge_levels(partials, plan)
+    state.write.mode("overwrite").parquet(path)
 
 
 def load_sketches(spark, path: str, names: list[str] | None = None
@@ -332,7 +467,8 @@ def load_sketches(spark, path: str, names: list[str] | None = None
 def build_sketches(df: DataFrame, specs: list[SketchSpec],
                    salt_partitions: int | None = None,
                    route_for: str | None = None) -> dict[str, MergeableSketch]:
-    """scan -> per-partition partials (mapInArrow) -> treeAggregate merge."""
+    """scan -> per-partition partials (mapInArrow) -> ``tree_merge``
+    under the ``"auto"`` plan."""
     return tree_merge(build_partials(df, specs, salt_partitions=salt_partitions,
                                      route_for=route_for))
 

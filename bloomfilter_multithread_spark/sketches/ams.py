@@ -24,7 +24,8 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 from .hashing import splitmix64, to_u64
 
 _U64 = np.uint64
@@ -55,6 +56,11 @@ class AMSSketch(MergeableSketch):
     @classmethod
     def create(cls, reps: int = 256, groups: int = 8) -> "AMSSketch":
         return cls(reps=reps, groups=groups)
+
+    @classmethod
+    def wire_bytes_bound(cls, reps: int = 256, groups: int = 8) -> int:
+        """One int64 counter per repetition."""
+        return ENVELOPE_BYTES + 16 + ARRAY_PREFIX_BYTES + 8 * reps
 
     def _signs(self, u: np.ndarray) -> np.ndarray:
         """(reps, n) int8 ±1 sign matrix: bit i of the ⌊i/64⌋-th mixed

@@ -26,6 +26,10 @@ import numpy as np
 
 _MAGIC = 0x534B4348
 _HEADER = struct.Struct("<IBBQ")
+# bytes ``to_bytes`` adds around every payload
+ENVELOPE_BYTES = _HEADER.size
+# np_tobytes' length prefix per array
+ARRAY_PREFIX_BYTES = 8
 
 _REGISTRY: dict[int, type["MergeableSketch"]] = {}
 _BY_NAME: dict[str, type["MergeableSketch"]] = {}
@@ -52,6 +56,18 @@ class MergeableSketch(ABC):
     KIND_ID: int = -1
     NAME: str = "abstract"
     VERSION: int = 1
+    # True when merging the same inserts in any grouping and order gives
+    # the same bytes as inserting them into one sketch (OR, max, add, set
+    # union). A kind that sets it False states its accuracy bound instead
+    # (KLL and t-digest ``rank_error_bound``, Misra-Gries ``error_bound``).
+    merge_exact: bool = True
+
+    @classmethod
+    @abstractmethod
+    def wire_bytes_bound(cls, **params) -> int:
+        """Most bytes ``to_bytes`` can return for a sketch made by
+        ``create(**params)``, however many values it holds: what one
+        partial can put on the wire, known before any row is read."""
 
     @abstractmethod
     def merge(self, other: "MergeableSketch") -> "MergeableSketch":

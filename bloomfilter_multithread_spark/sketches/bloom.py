@@ -25,7 +25,8 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 from .hashing import double_hash_indices, to_u64, xorshift32_batch
 
 _U64 = np.uint64
@@ -165,6 +166,13 @@ class BloomSketch(MergeableSketch):
         only the Poisson block-imbalance penalty, negligible for blocks
         >= 2^20 bits."""
         return cls(m_bits=m_bits, k=k, block_bits=block_bits)
+
+    @classmethod
+    def wire_bytes_bound(cls, m_bits: int = 1 << 20, k: int = 5, block_bits: int = 0) -> int:
+        """The packed array, plus a 4-byte id per block in the blocks
+        form; the sparse form is chosen only when it is smaller."""
+        nb = m_bits // block_bits if block_bits and block_bits < m_bits else 0
+        return ENVELOPE_BYTES + 21 + 2 * ARRAY_PREFIX_BYTES + m_bits // 8 + 4 * nb
 
     @classmethod
     def for_capacity(cls, n_items: int, target_fpr: float = 1e-3) -> "BloomSketch":

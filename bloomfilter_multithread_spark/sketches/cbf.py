@@ -48,7 +48,8 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 from .hashing import double_hash_indices, to_u64
 
 _U64 = np.uint64
@@ -84,6 +85,14 @@ class CBFSketch(MergeableSketch):
     def create(cls, m_slots: int = 1 << 20, k: int = 5,
                block_slots: int = 0) -> "CBFSketch":
         return cls(m_slots=m_slots, k=k, block_slots=block_slots)
+
+    @classmethod
+    def wire_bytes_bound(cls, m_slots: int = 1 << 20, k: int = 5,
+                         block_slots: int = 0) -> int:
+        """uint32 counters, plus a 4-byte id per block in the blocks form;
+        the sparse form is chosen only when it is smaller."""
+        nb = m_slots // block_slots if block_slots and block_slots < m_slots else 0
+        return ENVELOPE_BYTES + 21 + 2 * ARRAY_PREFIX_BYTES + 4 * m_slots + 4 * nb
 
     @property
     def counters(self) -> np.ndarray:

@@ -15,7 +15,8 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 from .hashing import splitmix64, to_u64
 
 _U64 = np.uint64
@@ -46,6 +47,11 @@ class CMSSketch(MergeableSketch):
     @classmethod
     def create(cls, width: int = 1 << 12, depth: int = 5) -> "CMSSketch":
         return cls(width=width, depth=depth)
+
+    @classmethod
+    def wire_bytes_bound(cls, width: int = 1 << 12, depth: int = 5) -> int:
+        """The dense int64 table, however few keys it counts."""
+        return ENVELOPE_BYTES + 16 + ARRAY_PREFIX_BYTES + 8 * width * depth
 
     @classmethod
     def for_bounds(cls, eps: float = 1e-4, delta: float = 1e-3) -> "CMSSketch":

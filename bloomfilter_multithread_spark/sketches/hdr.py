@@ -58,7 +58,8 @@ from fractions import Fraction
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 
 # powers of two for integer bit_length via searchsorted (exact; no log2
 # float round-trip — log2(2^47) computed as log(x)/log(2) can be off by
@@ -98,6 +99,13 @@ class HDRSketch(MergeableSketch):
     def create(cls, sub_bits: int = 5, max_bits: int = 40,
                unit_scale: int = 1) -> "HDRSketch":
         return cls(sub_bits=sub_bits, max_bits=max_bits, unit_scale=unit_scale)
+
+    @classmethod
+    def wire_bytes_bound(cls, sub_bits: int = 5, max_bits: int = 40,
+                         unit_scale: int = 1) -> int:
+        """An (int64 index, int64 count) pair per non-empty bucket."""
+        n_buckets = (1 << (sub_bits + 1)) + (max_bits - sub_bits - 1) * (1 << sub_bits)
+        return ENVELOPE_BYTES + 32 + 2 * ARRAY_PREFIX_BYTES + 16 * n_buckets
 
     # -- mapping (the contract both engines replicate) -------------------
 

@@ -13,7 +13,8 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 from .hashing import to_u64
 
 _U64 = np.uint64
@@ -62,6 +63,12 @@ class HLLSketch(MergeableSketch):
     @classmethod
     def create(cls, p: int = 14) -> "HLLSketch":
         return cls(p=p)
+
+    @classmethod
+    def wire_bytes_bound(cls, p: int = 14) -> int:
+        """One byte per register; the sparse form is chosen only when it
+        is smaller."""
+        return ENVELOPE_BYTES + 5 + 2 * ARRAY_PREFIX_BYTES + (1 << p)
 
     def update_hashes(self, h) -> "HLLSketch":
         u = to_u64(h)

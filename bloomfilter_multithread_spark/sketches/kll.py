@@ -21,7 +21,7 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_tobytes, register
+from .base import ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_tobytes, register
 
 _C = 2.0 / 3.0
 
@@ -29,6 +29,9 @@ _C = 2.0 / 3.0
 @register(4)
 class KLLSketch(MergeableSketch):
     NAME = "kll"
+    # compaction depends on the merge order; rank_error_bound() is the
+    # tolerance every merge order is held to
+    merge_exact = False
 
     def __init__(self, k: int = 200, compactors=None, offsets=None, n: int = 0):
         self.k = int(k)
@@ -42,6 +45,15 @@ class KLLSketch(MergeableSketch):
     @classmethod
     def create(cls, k: int = 200) -> "KLLSketch":
         return cls(k=k)
+
+    @classmethod
+    def wire_bytes_bound(cls, k: int = 200) -> int:
+        """After ``_compress`` a sketch of height H holds fewer than its
+        capacity, sum of max(2, ceil(k (2/3)^j)) <= 3k + 2H items; with
+        n < 2^63 values the height stays under 64 levels, each also
+        carrying a 4-byte offset and an 8-byte length prefix."""
+        h = 64
+        return ENVELOPE_BYTES + 16 + h * (4 + ARRAY_PREFIX_BYTES) + 8 * (3 * k + 2 * h)
 
     # -- internals -------------------------------------------------------
     def _capacity(self, level: int) -> int:

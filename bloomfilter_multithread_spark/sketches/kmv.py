@@ -43,7 +43,8 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 from .hashing import to_u64
 
 _TWO64 = float(1 << 64)
@@ -67,6 +68,11 @@ class KMVSketch(MergeableSketch):
     @classmethod
     def create(cls, k: int = 1024) -> "KMVSketch":
         return cls(k=k)
+
+    @classmethod
+    def wire_bytes_bound(cls, k: int = 1024) -> int:
+        """At most k retained uint64 hashes."""
+        return ENVELOPE_BYTES + 4 + ARRAY_PREFIX_BYTES + 8 * k
 
     # -- build ---------------------------------------------------------
     def update_hashes(self, h) -> "KMVSketch":

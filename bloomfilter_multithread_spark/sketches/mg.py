@@ -32,13 +32,16 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import MergeableSketch, register
+from .base import ENVELOPE_BYTES, MergeableSketch, register
 
 
 @register(7)
 class MGSketch(MergeableSketch):
     NAME = "mg"
     VERSION = 1
+    # the decrement rule makes the survivors depend on the merge order;
+    # every order keeps 0 <= true - estimate <= error_bound()
+    merge_exact = False
 
     def __init__(self, k: int, keys: np.ndarray | None = None,
                  counts: np.ndarray | None = None, n_total: int = 0):
@@ -52,6 +55,11 @@ class MGSketch(MergeableSketch):
     @classmethod
     def create(cls, k: int = 4096) -> "MGSketch":
         return cls(k=k)
+
+    @classmethod
+    def wire_bytes_bound(cls, k: int = 4096) -> int:
+        """At most k (int64 key, int64 count) survivors."""
+        return ENVELOPE_BYTES + 24 + 16 * k
 
     # -- core ----------------------------------------------------------
 

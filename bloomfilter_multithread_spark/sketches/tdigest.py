@@ -17,7 +17,8 @@ import struct
 
 import numpy as np
 
-from .base import MergeableSketch, np_frombytes, np_tobytes, register
+from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_frombytes,
+                   np_tobytes, register)
 
 
 def _k1(q: float, delta: float) -> float:
@@ -28,6 +29,9 @@ def _k1(q: float, delta: float) -> float:
 @register(5)
 class TDigestSketch(MergeableSketch):
     NAME = "tdigest"
+    # re-clustering depends on the merge order; rank_error_bound() is the
+    # tolerance every merge order is held to
+    merge_exact = False
 
     def __init__(self, delta: float = 200.0, means=None, weights=None, n: int = 0,
                  vmin: float = math.inf, vmax: float = -math.inf):
@@ -57,6 +61,14 @@ class TDigestSketch(MergeableSketch):
     @classmethod
     def create(cls, delta: float = 200.0) -> "TDigestSketch":
         return cls(delta=delta)
+
+    @classmethod
+    def wire_bytes_bound(cls, delta: float = 200.0) -> int:
+        """``_fold`` leaves at most one centroid per unit of k1 scale,
+        about delta/2 of them (one more for float rounding at q = 1),
+        each a float64 mean and weight."""
+        centroids = math.ceil(delta / 2) + 1
+        return ENVELOPE_BYTES + 32 + 2 * ARRAY_PREFIX_BYTES + 16 * centroids
 
     def _fold(self, means: np.ndarray, weights: np.ndarray) -> None:
         """One deterministic, fully-vectorized merge pass: sorted points are
@@ -131,6 +143,13 @@ class TDigestSketch(MergeableSketch):
 
     def quantiles(self, qs) -> np.ndarray:
         return np.array([self.quantile(q) for q in qs])
+
+    def rank_error_bound(self) -> float:
+        """Normalized rank error allowed for a merged digest: 6/delta,
+        about twice the q-width pi/delta of one k1 centroid at the median
+        (the tails are tighter). t-digest has no proven worst-case bound;
+        this is the tolerance its merged-digest tests hold it to."""
+        return 6.0 / self.delta
 
     def _payload_bytes(self) -> bytes:
         self._flush()

@@ -1,0 +1,167 @@
+"""The merge plan (driver fold or executor merge), the wire-bytes bounds
+it is chosen from, and the misuse that must fail before any job runs."""
+
+from __future__ import annotations
+
+import numpy as np
+import pytest
+
+import bench
+from bloomfilter_multithread_spark.operators.build import (
+    DRIVER_FOLD_MAX_BYTES,
+    SPREAD_FANOUT,
+    SketchSpec,
+    build_and_persist,
+    build_partials,
+    build_sketches,
+    merge_plan,
+    partial_wire_bytes,
+    tree_merge,
+)
+from bloomfilter_multithread_spark.sketches import sketch_class
+from bloomfilter_multithread_spark.sketches.bloom import optimal_params
+
+# ------------------------------------------------------------ plan (no Spark)
+
+
+def _perfbench_specs():
+    """perfbench's transcript_build spec (100k turns at a 1e-2 target)."""
+    m, k = optimal_params(100_000, 1e-2)
+    return [
+        SketchSpec("bloom_text", "bloom", "text", {"m_bits": m, "k": k, "block_bits": m >> 4}),
+        SketchSpec("hll_conv", "hll", "conv_id", {"p": 14}),
+        SketchSpec("cms_tool", "cms", "tool", {"width": 1 << 14, "depth": 5}),
+        SketchSpec("kll_len", "kll", "length(text)", {"k": 200}),
+        SketchSpec("td_len", "tdigest", "length(text)", {"delta": 200.0}),
+    ]
+
+
+def _shingle_specs():
+    """bench.py's scaling build: one routed Bloom over ~60 shingles a turn
+    of ~5.6 turns per conversation."""
+    m, k = optimal_params(int(bench.N_SCALE_CONVS * 5.6) * 60, 1e-2)
+    return [SketchSpec("bloom_shingle", "bloom", "shingle_hash",
+                       {"m_bits": m, "k": k, "block_bits": 1 << 21}, pre_hashed=True)]
+
+
+def _total(specs, partitions: int, route_for: str) -> int:
+    per_partition, once = partial_wire_bytes(specs, route_for)
+    return once + partitions * per_partition
+
+
+@pytest.mark.parametrize("partitions", [4, 32])
+def test_perfbench_build_folds_on_the_driver(partitions):
+    wire = _total(_perfbench_specs(), partitions, "bloom_text")
+    assert wire <= DRIVER_FOLD_MAX_BYTES
+    assert merge_plan(wire) is None
+
+
+@pytest.mark.parametrize("partitions", [4, 32])
+def test_bench_headline_build_keeps_the_spread_plan(partitions):
+    assert merge_plan(_total(bench._specs(), partitions, "bloom_text")) == SPREAD_FANOUT
+
+
+def test_bench_scaling_build_keeps_the_spread_plan():
+    wire = _total(_shingle_specs(), bench.SCALE_PARTITIONS, "bloom_shingle")
+    assert merge_plan(wire) == SPREAD_FANOUT
+
+
+def test_routed_spec_counts_once():
+    specs = _perfbench_specs()
+    per_spec = {s.name: sketch_class(s.kind).wire_bytes_bound(**s.params) for s in specs}
+    routed = per_spec["bloom_text"]
+    assert partial_wire_bytes(specs, "bloom_text") == (sum(per_spec.values()) - routed, routed)
+    assert partial_wire_bytes(specs) == (sum(per_spec.values()), 0)
+
+
+def test_explicit_fanout_overrides_the_choice():
+    assert merge_plan(0, fanout=16) == 16
+    assert merge_plan(0, fanout=1) == 1
+    assert merge_plan(None) == SPREAD_FANOUT  # an unknown bound keeps the executors
+
+
+@pytest.mark.parametrize("fanout", [0, -3, 2.5, "fast", None, True])
+def test_bad_fanout_raises(fanout):
+    with pytest.raises(ValueError, match="fanout"):
+        merge_plan(0, fanout=fanout)
+
+
+# ------------------------------------------------------- wire-bytes bounds
+
+
+def _hashes(n: int, seed: int) -> np.ndarray:
+    return np.random.default_rng(seed).integers(-(2 ** 63), 2 ** 63 - 1, n, dtype=np.int64)
+
+
+def _values(n: int, seed: int) -> np.ndarray:
+    return np.random.default_rng(seed).lognormal(3.0, 2.0, n)
+
+
+# kind, params, is_value: each filled far past its sizing
+OVERFILLED = [
+    ("bloom", {"m_bits": 1 << 12, "k": 3}, False),
+    ("bloom", {"m_bits": 1 << 12, "k": 3, "block_bits": 1 << 6}, False),
+    ("cbf", {"m_slots": 1 << 10, "k": 3}, False),
+    ("cbf", {"m_slots": 1 << 10, "k": 3, "block_slots": 1 << 6}, False),
+    ("hll", {"p": 8}, False),
+    ("kmv", {"k": 64}, False),
+    ("cms", {"width": 1 << 8, "depth": 3}, False),
+    ("mg", {"k": 16}, False),
+    ("ams", {"reps": 64, "groups": 4}, False),
+    ("kll", {"k": 32}, True),
+    ("tdigest", {"delta": 20.0}, True),
+    ("hdr", {"sub_bits": 3, "max_bits": 30}, True),
+]
+
+
+@pytest.mark.parametrize("kind,params,is_value", OVERFILLED,
+                         ids=[f"{k}-{'-'.join(map(str, p.values()))}" for k, p, _ in OVERFILLED])
+def test_overfilled_partial_within_wire_bound(kind, params, is_value):
+    """Fed in batches and merged with other partials, as a partition and
+    the merge do, a sketch never serializes past its class's bound."""
+    cls = sketch_class(kind)
+    bound = cls.wire_bytes_bound(**params)
+    merged = cls.create(**params)
+    for seed in range(4):
+        part = cls.create(**params)
+        for batch in range(5):
+            if is_value:
+                part.update_values(_values(50_000, 10 * seed + batch))
+            else:
+                part.update_hashes(_hashes(20_000, 10 * seed + batch))
+        assert len(part.to_bytes()) <= bound
+        merged.merge(cls.from_bytes(part.to_bytes()))
+        assert len(merged.to_bytes()) <= bound
+    assert len(cls.create(**params).to_bytes()) <= bound
+
+
+def test_every_kind_states_a_bound():
+    kinds = {"bloom", "cbf", "hll", "kmv", "cms", "mg", "ams", "kll", "tdigest", "hdr"}
+    assert {k for k, _, _ in OVERFILLED} == kinds
+    for kind in kinds:
+        assert sketch_class(kind).wire_bytes_bound() > 0
+
+
+# ------------------------------------------------------------------ misuse
+
+
+def test_duplicate_spec_names_raise(spark, corpus):
+    specs = [SketchSpec("x", "hll", "conv_id", {"p": 12}),
+             SketchSpec("x", "kll", "length(text)", {"k": 200})]
+    with pytest.raises(ValueError, match="duplicate spec names"):
+        build_partials(corpus, specs)
+
+
+def test_route_for_naming_no_spec_raises(spark, corpus):
+    specs = [SketchSpec("b", "bloom", "text", {"m_bits": 1 << 16, "k": 3, "block_bits": 1 << 10})]
+    with pytest.raises(ValueError, match="route_for"):
+        build_sketches(corpus, specs, route_for="bloom_text")
+
+
+@pytest.mark.parametrize("fanout", [0, "fast"])
+def test_bad_fanout_raises_before_any_job(spark, corpus, tmp_path, fanout):
+    specs = [SketchSpec("h", "hll", "conv_id", {"p": 12})]
+    with pytest.raises(ValueError, match="fanout"):
+        tree_merge(build_partials(corpus, specs), fanout=fanout)
+    with pytest.raises(ValueError, match="fanout"):
+        build_and_persist(corpus, specs, str(tmp_path / "state"), fanout=fanout)

@@ -2,9 +2,10 @@
 
 Covers: zero-FN golden (query ⊂ corpus ⇒ all might_contain, the analog of
 inputs/query.txt being an exact prefix of inputs/sars-cov-2.fasta), FPR
-bound on guaranteed-absent keys, partition-count invariance of merged
-sketches (Spark-level), estimate-vs-exact against Spark aggregates, and
-shingle SQL-reproducibility against DuckDB.
+bound on guaranteed-absent keys, estimate-vs-exact against Spark
+aggregates, and shingle SQL-reproducibility against DuckDB. Invariance
+of the merged sketches to partitioning and merge plan is
+test_merge_invariance.py.
 """
 
 from __future__ import annotations
@@ -65,28 +66,6 @@ class TestBuildMergeProbe:
         observed = by[False]["hits"] / by[False]["n"]
         slack = 5 * np.sqrt(max(fpr_bound, 1e-12) / by[False]["n"])
         assert observed <= fpr_bound + slack
-
-    def test_partition_count_invariance_spark(self, spark, corpus):
-        """Same input at 2 vs 32 partitions ⇒ bit-identical Bloom/HLL/CMS
-        (SURVEY.md §5.2.4) — the Spark-level merge-law witness."""
-        specs = [
-            SketchSpec("b", "bloom", "text", {"m_bits": 1 << 20, "k": 4}),
-            SketchSpec("h", "hll", "conv_id", {"p": 12}),
-            SketchSpec("c", "cms", "role", {"width": 1 << 10, "depth": 4}),
-            SketchSpec("k", "kmv", "text", {"k": 128}),
-        ]
-        s2 = build_sketches(corpus.repartition(2), specs)
-        s32 = build_sketches(corpus.repartition(32), specs)
-        assert np.array_equal(s2["b"].bits, s32["b"].bits)
-        assert np.array_equal(s2["h"].registers, s32["h"].registers)
-        assert np.array_equal(s2["c"].table, s32["c"].table)
-        assert np.array_equal(s2["k"].values, s32["k"].values)
-
-    def test_salted_repartition_invariance(self, spark, corpus):
-        specs = [SketchSpec("b", "bloom", "conv_id", {"m_bits": 1 << 18, "k": 4})]
-        plain = build_sketches(corpus, specs)
-        salted = build_sketches(corpus, specs, salt_partitions=16)
-        assert np.array_equal(plain["b"].bits, salted["b"].bits)
 
     def test_hll_vs_exact_distinct(self, spark, corpus, built):
         exact = corpus.select("conv_id").distinct().count()
