@@ -5,7 +5,7 @@ Measures, on local[$SPARK_GRAFT_CPUS] against $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1):
   1. wall time of every __spark_entry__.queries() headline query,
   2. sketch build+merge throughput: parquet scan -> 5-sketch single-pass
-     mapInArrow build (blocked+routed Bloom) -> executor-side tree merge
+     mapInArrow build (blocked+routed Bloom) -> executor-side merge
      -> persisted state, over (a) lineitem and (b) a deterministic
      synthetic transcript table (~22M turns, materialized once to
      $SPARK_GRAFT_BENCH_DIR, tmpfs-preferred, and reused),
@@ -173,7 +173,7 @@ def shingle_bloom_job(spark, cores: int, trials: int = SCALE_TRIALS,
                       warm_runs: int = 1) -> tuple[int, int, list[float]]:
     """The scaling-evidence job: the reference's own pipeline shape —
     shingle (k-mer) derivation -> hash -> route by hash block -> blocked
-    Bloom partial build -> tree merge -> persisted sketch state. CPU-dense
+    Bloom partial build -> executor merge -> persisted sketch state. CPU-dense
     per input byte (≈60 shingle hashes per turn), which is what makes
     core-scaling measurable on a single box whose parquet-scan bandwidth
     ceiling alone caps at ~2.4x from 8->32 cores (see BENCH.md).

@@ -8,8 +8,9 @@ Bloom-filter pipeline over DNA k-mers) as an idiomatic Spark library:
   KLL, t-digest) sharing one ``MergeableSketch`` interface
   (create / update_hashes / merge / estimate / to_bytes / from_bytes).
 - ``operators`` — Spark-side build (per-partition partials via
-  ``mapInArrow``, two-level executor-side ``mapInArrow`` tree merge
-  with a packed-OR fast path), broadcast probe,
+  ``mapInArrow``, merged on the driver when small, else on the
+  executors, each sketch's partials in one ``mapInArrow`` task),
+  broadcast probe,
   dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding
   cosine), similarity search, and text analysis.
 - ``sources``   — IO (Iceberg with parquet fallback) and the

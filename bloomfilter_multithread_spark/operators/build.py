@@ -13,8 +13,8 @@ Re-expression of the reference pipeline (SURVEY.md §3.1):
                                              test); used only to balance skew
   per-thread disjoint Bloom insert           per-partition partial sketches
   (SkmerSplitter.cpp:62-89)                  in ONE mapInArrow pass (numpy)
-  (no merge — filters stay disjoint,         bitwise-OR / max / add
-   main.cpp:119-127)                         treeAggregate merge, log depth
+  (no merge — filters stay disjoint,         bitwise-OR / max / add merge,
+   main.cpp:119-127)                         on the driver or the executors
   probe (SkmerSplitter.cpp:91-151)           broadcast sketch + Arrow-batch
                                              probe column (zero shuffle)
 
@@ -28,8 +28,8 @@ Scale notes (100 TB / 10^12 turns, 1000 executors):
   O(P * sketch_bytes) — independent of row count. That bound is known
   from the spec params before the job runs, and it picks the merge plan
   (``merge_plan``): a small total is collected and folded on the driver,
-  a large one goes through the executor tree merge, which keeps the
-  driver from becoming the fan-in bottleneck at large P;
+  a large one is folded on the executors, each spec's partials in one
+  task, so the driver never ingests it;
 - probe broadcasts one merged sketch and adds a column map-side — no
   shuffle, no join.
 """
@@ -299,15 +299,13 @@ def _merge_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
 
 # The largest partial total (by ``wire_bytes_bound``) that is collected
 # and folded on the driver instead of merged on the executors. The
-# executor merge costs two shuffles and ~fanout + shuffle-partitions
-# Python tasks whatever the bytes; the driver fold costs one Arrow
-# collect and a serial fold. On 4 cores the driver fold beat both
-# executor shapes from 4 MiB to 80 MiB of partials (CHANGES.md); the
-# cut-off stays below the m = 2^29 (64 MiB) Bloom builds, whose spread
-# level was measured to scale on 32 cores.
+# executor merge costs a shuffle and one Python task per non-empty
+# shuffle partition whatever the bytes; the driver fold costs one Arrow
+# collect and a serial fold. On 4 cores the driver fold was the faster
+# from 4 MiB to 80 MiB of partials (CHANGES.md); the cut-off stays below
+# the m = 2^29 (64 MiB) Bloom builds, which the 32-core box has not been
+# measured on.
 DRIVER_FOLD_MAX_BYTES = 32 << 20
-# the spread level's fanout when the plan is left to "auto"
-SPREAD_FANOUT = 16
 
 
 def partial_wire_bytes(specs: list[SketchSpec],
@@ -327,19 +325,12 @@ def partial_wire_bytes(specs: list[SketchSpec],
     return per_partition, once
 
 
-def merge_plan(wire_bytes: int | None, fanout: int | str = "auto") -> int | None:
-    """The merge for partials bounded by ``wire_bytes`` in total (None:
-    unknown): None folds them on the driver, an int runs the executor
-    merge with that fanout (``_merge_levels``). An explicit integer
-    ``fanout`` is always the executor merge; ``"auto"`` folds on the
-    driver up to ``DRIVER_FOLD_MAX_BYTES``, else spreads over
-    ``SPREAD_FANOUT``."""
-    if fanout == "auto":
-        small = wire_bytes is not None and wire_bytes <= DRIVER_FOLD_MAX_BYTES
-        return None if small else SPREAD_FANOUT
-    if isinstance(fanout, bool) or not isinstance(fanout, int) or fanout < 1:
-        raise ValueError(f"fanout must be 'auto' or an int >= 1, got {fanout!r}")
-    return fanout
+def merge_plan(wire_bytes: int | None) -> str:
+    """Where partials bounded by ``wire_bytes`` in total (None: unknown)
+    are folded: ``"driver"`` up to ``DRIVER_FOLD_MAX_BYTES``, else
+    ``"executors"`` (``_executor_merge``)."""
+    small = wire_bytes is not None and wire_bytes <= DRIVER_FOLD_MAX_BYTES
+    return "driver" if small else "executors"
 
 
 def _partition_count(df: DataFrame) -> int | None:
@@ -379,78 +370,59 @@ def _plan_partitions(node) -> int | None:
     return sum(counts)
 
 
-def _plan_for(partials: DataFrame, fanout: int | str) -> int | None:
+def _plan_for(partials: DataFrame) -> str:
     """``merge_plan`` for a ``build_partials`` result: its spec bounds
     ride on the sketch column's metadata, P is its partition count. Other
     partial frames (no metadata) take the executor merge."""
     meta = partials.schema["sketch"].metadata
     wire_bytes = None
-    if fanout == "auto" and "wire_bytes_per_partition" in meta:
+    if "wire_bytes_per_partition" in meta:
         p = _partition_count(partials)
         if p is not None:
             wire_bytes = meta["wire_bytes_once"] + p * meta["wire_bytes_per_partition"]
-    return merge_plan(wire_bytes, fanout)
+    return merge_plan(wire_bytes)
 
 
-def tree_merge(partials: DataFrame, fanout: int | str = "auto") -> dict[str, MergeableSketch]:
+def _executor_merge(partials: DataFrame) -> DataFrame:
+    """Fold partials on the executors to one row per (group_key,
+    spec_name): one exchange on that key, then ``_merge_batches`` in each
+    task. The global and the grouped build both merge this way."""
+    return partials.repartition("group_key", "spec_name").mapInArrow(_merge_task, PARTIAL_DDL)
+
+
+def tree_merge(partials: DataFrame) -> dict[str, MergeableSketch]:
     """Merge partial sketches into one sketch per spec — the merge
     primitive the reference lacks (its q filters stay disjoint forever,
-    main.cpp:119-127). ``merge_plan`` picks how:
-
-    - driver fold (``"auto"`` and a small bound): one collect of the P
-      partials, folded here; no shuffle and no merge task;
-    - executor merge (an integer ``fanout``, or ``"auto"`` and a large
-      bound), two levels. Level 1 spreads each spec's P partials over
-      ~``fanout`` tasks keyed by (spec_name, partition_id % fanout) — the
-      expensive part of a large Bloom merge (sparse-index scatter into
-      the dense array) parallelizes here instead of serializing in one
-      task (measured 0.31 -> ~0.8+ scaling efficiency on the bench job).
-      Level 2 co-locates each spec's <=fanout level-1 outputs and folds
-      them to ONE row; dense Bloom partials stay PACKED through this
-      level (8x smaller, OR-without-unpack). The driver collects exactly
-      len(specs) rows. At cluster scale pick fanout ~ sqrt(P) so both
-      levels stay balanced.
-    """
-    plan = _plan_for(partials, fanout)
-    if plan is None:
-        return merge_partials_local(partials.toArrow().to_pylist())
-    return merge_partials_local(_merge_levels(partials, plan).collect())
-
-
-def _merge_levels(partials: DataFrame, fanout: int) -> DataFrame:
-    """Fold partials on the executors to one row per (group_key,
-    spec_name). The spread level runs only for ``fanout > 1``: a grouped
-    build's keys already spread its merge."""
-    key = [F.col("group_key"), F.col("spec_name")]
-    if fanout > 1:
-        partials = (
-            partials.repartition(fanout, *key, F.pmod(F.col("partition_id"), F.lit(fanout)))
-            .mapInArrow(_merge_task, PARTIAL_DDL)
-        )
-    return partials.repartition(*key).mapInArrow(_merge_task, PARTIAL_DDL)
+    main.cpp:119-127). ``merge_plan`` picks where: on the driver, the
+    P partials are collected and folded here, with no shuffle and no
+    merge task; on the executors, each spec's partials are folded in one
+    task (``_executor_merge``) and the driver collects one row per spec.
+    Either way the rows come to the driver over Arrow."""
+    if _plan_for(partials) == "executors":
+        partials = _executor_merge(partials)
+    return merge_partials_local(partials.toArrow().to_pylist())
 
 
 def build_and_persist(df: DataFrame, specs: list[SketchSpec], path: str,
-                      route_for: str | None = None, fanout: int | str = "auto",
+                      route_for: str | None = None,
                       route_partitions: int | None = None) -> None:
     """Cluster-side build: scan -> partials -> merge -> parquet state at
     ``path``, one ``PARTIAL_DDL`` row per spec; consumers load exactly the
     specs they need via ``load_sketches``. The merge follows
-    ``merge_plan``: under the driver fold the driver merges the small
-    partials and writes the state in one task; under the executor merge
-    the executors write it and the driver never ingests the merged blobs
-    (at m = 2^29+ the py4j collect is seconds of serial time a cluster
-    job shouldn't pay). This is the scale-correct form of the reference's
-    stubbed binary sink (main.cpp:233-239)."""
+    ``merge_plan``: on the driver, the driver merges the small partials
+    and writes the state in one task; on the executors, the executors
+    write it and the driver never ingests the merged blobs (at m = 2^29+
+    the collect is seconds of serial time a cluster job shouldn't pay).
+    This is the scale-correct form of the reference's stubbed binary sink
+    (main.cpp:233-239)."""
     partials = build_partials(df, specs, route_for=route_for, route_partitions=route_partitions)
-    plan = _plan_for(partials, fanout)
-    if plan is None:
+    if _plan_for(partials) == "driver":
         # the executors' combiner, run here over the collected partials
         folded = _merge_batches(partials.toArrow().to_batches(), 0)
         table = pa.Table.from_batches(list(folded), schema=_PARTIAL_SCHEMA)
         state = df.sparkSession.createDataFrame(table).coalesce(1)
     else:
-        state = _merge_levels(partials, plan)
+        state = _executor_merge(partials)
     state.write.mode("overwrite").parquet(path)
 
 
@@ -467,8 +439,7 @@ def load_sketches(spark, path: str, names: list[str] | None = None
 def build_sketches(df: DataFrame, specs: list[SketchSpec],
                    salt_partitions: int | None = None,
                    route_for: str | None = None) -> dict[str, MergeableSketch]:
-    """scan -> per-partition partials (mapInArrow) -> ``tree_merge``
-    under the ``"auto"`` plan."""
+    """scan -> per-partition partials (mapInArrow) -> ``tree_merge``."""
     return tree_merge(build_partials(df, specs, salt_partitions=salt_partitions,
                                      route_for=route_for))
 

@@ -4,11 +4,11 @@ The grouped build is the global build (``build.py``) with a group key:
 the same one-pass ``mapInArrow`` kernel splits each Arrow batch by key
 (one stable sort of the batch's dictionary codes) and emits one partial
 per (group, spec) present in the partition; the same ``_merge_batches``
-then folds the partials, exchanged on (group_key, spec_name). The
-shuffle moves at most |groups x partitions x specs| sketch blobs, never
-data rows. The global build's spread level is skipped: the group keys
-already spread the merge. A hot group still fans in to one merge task,
-but its input is capped at one partial per map partition.
+then folds the partials in the executor merge the global build uses,
+exchanged on (group_key, spec_name). The shuffle moves at most
+|groups x partitions x specs| sketch blobs, never data rows. A hot group
+fans in to one merge task, but its input is capped at one partial per
+map partition.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..sketches import MergeableSketch
-from .build import SketchSpec, _merge_levels, build_partials
+from .build import SketchSpec, _executor_merge, build_partials
 
 
 def build_sketches_grouped(
@@ -26,7 +26,7 @@ def build_sketches_grouped(
     its string form (cast both when joining back); null keys are dropped.
     Returns a DataFrame (group_key, spec_name, n_rows, sketch) with
     exactly one row per (group, spec)."""
-    return _merge_levels(build_partials(df, specs, group_col=group_col), fanout=1) \
+    return _executor_merge(build_partials(df, specs, group_col=group_col)) \
         .select("group_key", "spec_name", "n_rows", "sketch")
 
 

@@ -373,7 +373,7 @@ class BloomSketch(MergeableSketch):
         body = payload[21:]
         if fmt == cls._FMT_DENSE:
             (words,) = np_frombytes(body, [(_U64, None)])
-            # stays packed — upper merge levels OR without unpacking
+            # stays packed — a merge with another dense blob ORs without unpacking
             return cls(m_bits=m_bits, k=k, block_bits=block_bits,
                        packed=words.view(np.uint8).copy())
         if fmt == cls._FMT_BLOCKS:

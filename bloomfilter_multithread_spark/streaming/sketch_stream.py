@@ -41,7 +41,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.build import SketchSpec, build_partials, merge_partials_local
 from ..sketches import MergeableSketch
-from ..sketches.base import merge_all
 
 
 class StreamingSketchBuilder:

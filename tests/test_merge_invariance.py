@@ -17,6 +17,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from bloomfilter_multithread_spark.operators import build
 from bloomfilter_multithread_spark.operators.build import (
     SketchSpec,
     _plan_for,
@@ -55,13 +56,24 @@ QUANTILES = (0.05, 0.25, 0.5, 0.75, 0.95)
 
 
 def _driver_fold(df, tmp):
-    assert _plan_for(build_partials(df, SPECS), "auto") is None
+    assert _plan_for(build_partials(df, SPECS)) == "driver"
     return build_sketches(df, SPECS)
+
+
+def _executor_merge(df, tmp):
+    partials = build_partials(df, SPECS)
+    assert _plan_for(partials) == "executors"
+    return tree_merge(partials)
 
 
 def _persist(df, tmp):
     build_and_persist(df, SPECS, str(tmp / "state"))
     return load_sketches(df.sparkSession, str(tmp / "state"))
+
+
+def _persist_executors(df, tmp):
+    assert _plan_for(build_partials(df, SPECS)) == "executors"
+    return _persist(df, tmp)
 
 
 def _grouped_one_group(df, tmp):
@@ -86,16 +98,18 @@ def _stream_foreach_batch(df, tmp):
 
 SHAPES = {
     "driver_fold": _driver_fold,
-    "fanout_1": lambda df, tmp: tree_merge(build_partials(df, SPECS), fanout=1),
-    "fanout_16": lambda df, tmp: tree_merge(build_partials(df, SPECS), fanout=16),
+    "executor_merge": _executor_merge,
     "route_for": lambda df, tmp: build_sketches(df, SPECS, route_for="bloom"),
     "salt_partitions": lambda df, tmp: build_sketches(df, SPECS, salt_partitions=16),
     "partitions_32": lambda df, tmp: build_sketches(df.repartition(32), SPECS),
     "persist": _persist,
+    "persist_executors": _persist_executors,
     "grouped_one_group": _grouped_one_group,
     "checkpoint_resume": _checkpoint_resume,
     "stream_foreach_batch": _stream_foreach_batch,
 }
+# shapes run with the executor merge forced: no partials fit the driver fold
+ON_EXECUTORS = {"executor_merge", "persist_executors"}
 
 
 @pytest.fixture(scope="module")
@@ -148,7 +162,10 @@ def test_specs_cover_every_kind():
 
 
 @pytest.mark.parametrize("shape", list(SHAPES))
-def test_merge_shape_invariance(spark, corpus, one_partition, exact, tmp_path, shape):
+def test_merge_shape_invariance(spark, corpus, one_partition, exact, tmp_path, monkeypatch,
+                                shape):
+    if shape in ON_EXECUTORS:
+        monkeypatch.setattr(build, "DRIVER_FOLD_MAX_BYTES", -1)
     got = SHAPES[shape](corpus, tmp_path)
     assert set(got) == {s.name for s in SPECS}
     failures = {s.name: f for s in SPECS

@@ -1,5 +1,6 @@
 """The merge plan (driver fold or executor merge), the wire-bytes bounds
-it is chosen from, and the misuse that must fail before any job runs."""
+and the partition count it is chosen from, and the misuse that must fail
+before any job runs."""
 
 from __future__ import annotations
 
@@ -9,14 +10,13 @@ import pytest
 import bench
 from bloomfilter_multithread_spark.operators.build import (
     DRIVER_FOLD_MAX_BYTES,
-    SPREAD_FANOUT,
     SketchSpec,
-    build_and_persist,
+    _partition_count,
+    _plan_for,
     build_partials,
     build_sketches,
     merge_plan,
     partial_wire_bytes,
-    tree_merge,
 )
 from bloomfilter_multithread_spark.sketches import sketch_class
 from bloomfilter_multithread_spark.sketches.bloom import optimal_params
@@ -53,17 +53,23 @@ def _total(specs, partitions: int, route_for: str) -> int:
 def test_perfbench_build_folds_on_the_driver(partitions):
     wire = _total(_perfbench_specs(), partitions, "bloom_text")
     assert wire <= DRIVER_FOLD_MAX_BYTES
-    assert merge_plan(wire) is None
+    assert merge_plan(wire) == "driver"
 
 
 @pytest.mark.parametrize("partitions", [4, 32])
-def test_bench_headline_build_keeps_the_spread_plan(partitions):
-    assert merge_plan(_total(bench._specs(), partitions, "bloom_text")) == SPREAD_FANOUT
+def test_bench_headline_build_takes_the_executor_merge(partitions):
+    assert merge_plan(_total(bench._specs(), partitions, "bloom_text")) == "executors"
 
 
-def test_bench_scaling_build_keeps_the_spread_plan():
+def test_bench_scaling_build_takes_the_executor_merge():
     wire = _total(_shingle_specs(), bench.SCALE_PARTITIONS, "bloom_shingle")
-    assert merge_plan(wire) == SPREAD_FANOUT
+    assert merge_plan(wire) == "executors"
+
+
+def test_driver_fold_needs_a_known_bound_within_the_cut_off():
+    assert merge_plan(None) == "executors"
+    assert merge_plan(DRIVER_FOLD_MAX_BYTES) == "driver"
+    assert merge_plan(DRIVER_FOLD_MAX_BYTES + 1) == "executors"
 
 
 def test_routed_spec_counts_once():
@@ -72,18 +78,6 @@ def test_routed_spec_counts_once():
     routed = per_spec["bloom_text"]
     assert partial_wire_bytes(specs, "bloom_text") == (sum(per_spec.values()) - routed, routed)
     assert partial_wire_bytes(specs) == (sum(per_spec.values()), 0)
-
-
-def test_explicit_fanout_overrides_the_choice():
-    assert merge_plan(0, fanout=16) == 16
-    assert merge_plan(0, fanout=1) == 1
-    assert merge_plan(None) == SPREAD_FANOUT  # an unknown bound keeps the executors
-
-
-@pytest.mark.parametrize("fanout", [0, -3, 2.5, "fast", None, True])
-def test_bad_fanout_raises(fanout):
-    with pytest.raises(ValueError, match="fanout"):
-        merge_plan(0, fanout=fanout)
 
 
 # ------------------------------------------------------- wire-bytes bounds
@@ -142,6 +136,53 @@ def test_every_kind_states_a_bound():
         assert sketch_class(kind).wire_bytes_bound() > 0
 
 
+# ------------------------------------------- partition count (Spark plan)
+
+HLL = [SketchSpec("h", "hll", "conv_id", {"p": 10})]
+
+
+def _rdd_frame(spark, partitions: int):
+    rows = [(f"conv-{i}", f"w{i}") for i in range(40)]
+    return spark.sparkContext.parallelize(rows, partitions).toDF(["conv_id", "text"])
+
+
+def test_partition_count_of_a_routed_exchange(spark, corpus):
+    specs = HLL + [SketchSpec("b", "bloom", "text",
+                              {"m_bits": 1 << 16, "k": 3, "block_bits": 1 << 10})]
+    partials = build_partials(corpus, specs, route_for="b", route_partitions=7)
+    assert _partition_count(partials) == 7
+
+
+def test_partition_count_of_a_parquet_scan(spark, tmp_path):
+    _rdd_frame(spark, 3).write.parquet(str(tmp_path / "pq"))
+    df = spark.read.parquet(str(tmp_path / "pq"))
+    splits = df.rdd.getNumPartitions()
+    assert splits > 1
+    assert _partition_count(build_partials(df, HLL)) == splits
+
+
+def test_partition_count_of_a_cache_once_filled(spark):
+    df = _rdd_frame(spark, 3).cache()
+    try:
+        assert _partition_count(build_partials(df, HLL)) is None
+        df.count()
+        assert _partition_count(build_partials(df, HLL)) == 3
+    finally:
+        df.unpersist()
+
+
+def test_partition_count_of_a_union_is_the_sum(spark):
+    df = _rdd_frame(spark, 3).union(_rdd_frame(spark, 2))
+    assert _partition_count(build_partials(df, HLL)) == 5
+
+
+def test_unknown_leaf_takes_the_executor_merge(spark):
+    df = spark.sql("SELECT * FROM VALUES ('c1', 'a'), ('c2', 'b') AS t(conv_id, text)")
+    partials = build_partials(df, HLL)
+    assert _partition_count(partials) is None
+    assert _plan_for(partials) == "executors"
+
+
 # ------------------------------------------------------------------ misuse
 
 
@@ -156,12 +197,3 @@ def test_route_for_naming_no_spec_raises(spark, corpus):
     specs = [SketchSpec("b", "bloom", "text", {"m_bits": 1 << 16, "k": 3, "block_bits": 1 << 10})]
     with pytest.raises(ValueError, match="route_for"):
         build_sketches(corpus, specs, route_for="bloom_text")
-
-
-@pytest.mark.parametrize("fanout", [0, "fast"])
-def test_bad_fanout_raises_before_any_job(spark, corpus, tmp_path, fanout):
-    specs = [SketchSpec("h", "hll", "conv_id", {"p": 12})]
-    with pytest.raises(ValueError, match="fanout"):
-        tree_merge(build_partials(corpus, specs), fanout=fanout)
-    with pytest.raises(ValueError, match="fanout"):
-        build_and_persist(corpus, specs, str(tmp_path / "state"), fanout=fanout)
