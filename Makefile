@@ -3,7 +3,7 @@
 PKG = bloomfilter_multithread_spark
 DIST = dist/$(PKG).zip
 
-.PHONY: dist submit-demo submit-demo-cluster probe-demo test bench clean
+.PHONY: dist submit-demo submit-demo-cluster probe-demo test bench task-overhead clean
 
 dist:
 	mkdir -p dist
@@ -52,6 +52,11 @@ test:
 
 bench:
 	python bench.py
+
+# wall time of a 16-partition no-op mapInArrow on local[nproc], cold and
+# warm workers: the fixed cost every Python task of a build pays
+task-overhead:
+	PYTHONPATH=$(CURDIR) python scripts/task_overhead.py
 
 clean:
 	rm -rf dist

@@ -25,4 +25,8 @@ Design rule: ALL string->int64 hashing happens JVM-side through
 int64 arrays and do pure numpy bit arithmetic. No per-row Python.
 """
 
+# Installs the stamp-checked zip importer cache in every process that
+# imports the package, Spark's Python workers included.
+from . import _zipimport_cache  # noqa: F401
+
 __version__ = "0.1.0"

@@ -429,8 +429,10 @@ def build_and_persist(df: DataFrame, specs: list[SketchSpec], path: str,
 def load_sketches(spark, path: str, names: list[str] | None = None
                   ) -> dict[str, MergeableSketch]:
     """Load merged sketches from a ``build_and_persist`` state dir,
-    optionally only the named specs (predicate pushes to the parquet scan)."""
-    df = spark.read.parquet(path)
+    optionally only the named specs (predicate pushes to the parquet scan).
+    The schema is given, so the load runs no schema-inference job; a state
+    written before ``group_key`` existed reads it as null."""
+    df = spark.read.schema(PARTIAL_DDL).parquet(path)
     if names:
         df = df.where(F.col("spec_name").isin(list(names)))
     return merge_partials_local(df.collect())

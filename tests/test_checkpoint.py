@@ -75,3 +75,14 @@ def test_build_and_persist_roundtrip(spark, corpus, tmp_path):
     only_h = load_sketches(spark, path, ["h"])
     assert set(only_h) == {"h"}
     assert only_h["h"].estimate() > 0
+
+
+def test_load_sketches_reads_a_state_without_group_key(spark, corpus, tmp_path):
+    path, old = str(tmp_path / "state"), str(tmp_path / "old_state")
+    build_and_persist(corpus, _specs(), path)
+    spark.read.parquet(path).drop("group_key").write.parquet(old)
+    assert spark.read.parquet(old).columns == ["spec_name", "partition_id", "n_rows", "sketch"]
+    got, want = load_sketches(spark, old), load_sketches(spark, path)
+    assert set(got) == set(want) == {s.name for s in _specs()}
+    for name in want:
+        assert got[name].to_bytes() == want[name].to_bytes(), name
