@@ -22,7 +22,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BENCH_PY = os.path.join(REPO, "bench.py")
-EPOCHS = int(os.environ.get("SPARK_GRAFT_SCALE_EPOCHS", "2"))
 
 
 def main() -> None:
@@ -38,7 +37,7 @@ def main() -> None:
     levels = (1, 4)
     by_level: dict[int, list[float]] = {n: [] for n in levels}
     meta: dict[int, dict] = {}
-    for epoch in range(EPOCHS):
+    for epoch in range(benchmod.SCALE_EPOCHS):
         for n in levels:  # epoch-interleaved across levels (see bench.py)
             out = subprocess.run(
                 [sys.executable, BENCH_PY, "--scale-worker-execs", str(n)],
@@ -67,7 +66,7 @@ def main() -> None:
         "sec_small": round(med[1], 3), "sec_big": round(med[4], 3),
         "tps_small": round(tps[1], 1), "tps_big": round(tps[4], 1),
         "efficiency": round(eff, 3), "efficiency_best": round(eff_best, 3),
-        "epochs": EPOCHS,
+        "epochs": benchmod.SCALE_EPOCHS,
     }))
 
 
