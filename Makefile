@@ -3,7 +3,7 @@
 PKG = bloomfilter_multithread_spark
 DIST = dist/$(PKG).zip
 
-.PHONY: dist submit-demo submit-demo-cluster probe-demo test bench task-overhead clean
+.PHONY: dist submit-demo submit-demo-cluster probe-demo test bench task-overhead route-cutoff clean
 
 dist:
 	mkdir -p dist
@@ -57,6 +57,11 @@ bench:
 # warm workers: the fixed cost every Python task of a build pays
 task-overhead:
 	PYTHONPATH=$(CURDIR) python scripts/task_overhead.py
+
+# routed vs unrouted build_and_persist + load_sketches at Bloom m = 2^20..2^27,
+# 100k and 1M rows, on local[nproc]: where ROUTE_MIN_BYTES should sit
+route-cutoff:
+	PYTHONPATH=$(CURDIR) python scripts/route_cutoff.py
 
 clean:
 	rm -rf dist

@@ -2600,9 +2600,10 @@ def _q_cbf_retract_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     retract = tr.where(F.col("user_id") % 4 == 0)
     survivors = corpus.where(F.col("user_id") % 4 == 2)
     probe = tr.where(F.col("user_id") % 2 == 1)
-    # blocked + routed build: the 100 TB shape (counters are 8 B/slot —
+    # blocked + route_for: the 100 TB shape (counters are 8 B/slot —
     # 64x a Bloom bit — so block-local O(m/P) working sets matter even
-    # more here; routed == unrouted is property-tested)
+    # more there); 2^20 slots is below ROUTE_MIN_BYTES, so this size
+    # builds unrouted (routed == unrouted is property-tested)
     spec = [SketchSpec("c", "cbf", "text",
                        {"m_slots": 1 << 20, "k": 5, "block_slots": 1 << 16})]
     built = build_sketches(corpus, spec, route_for="c")["c"]

@@ -102,6 +102,28 @@ def ensure_bench_input(spark) -> str:
     return path
 
 
+def _stop_jvm(spark) -> None:
+    """Stop ``spark`` and end its py4j gateway JVM, waiting for it to exit:
+    ``spark.stop()`` alone leaves the JVM, with its heap, resident until
+    this process exits."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway is None:
+        return
+    proc = getattr(gateway, "proc", None)
+    gateway.shutdown()
+    if proc is not None:
+        proc.stdin.close()  # the JVM exits when its stdin closes
+        try:
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    SparkContext._gateway = SparkContext._jvm = None
+
+
 def _warm_workers(spark, cores: int) -> None:
     import pyarrow as pa
 
@@ -350,7 +372,8 @@ def _query_phase() -> tuple[dict[str, float], float]:
     )
     li_sec = time.time() - t0
     results["sketch_build_lineitem"] = round(li_sec, 3)
-    spark.stop()
+    # the build and scaling phases run in JVMs of their own
+    _stop_jvm(spark)
     return results, round(n_li / li_sec, 1)
 
 

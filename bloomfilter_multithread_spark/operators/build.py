@@ -5,12 +5,16 @@ Re-expression of the reference pipeline (SURVEY.md §3.1):
   reference                                  here
   ---------                                  ----
   FASTA char scan (FastaReader.cpp:25-49)    columnar parquet/Iceberg scan
-  route `hmin % q` (SkmerExtractor.cpp:164)  optional salted repartition —
-                                             NOT needed for correctness:
-                                             merge is assoc+comm, so ANY
+  route `hmin % q` (SkmerExtractor.cpp:164)  exchange on the hash-block id
+                                             (``route_for``) only when the
+                                             filter outgrows the cache
+                                             (``ROUTE_MIN_BYTES``) — NOT
+                                             needed for correctness: merge
+                                             is assoc+comm, so ANY
                                              partitioning yields the same
                                              sketch (partition-invariance
-                                             test); used only to balance skew
+                                             test); optional salted
+                                             repartition to balance skew
   per-thread disjoint Bloom insert           per-partition partial sketches
   (SkmerSplitter.cpp:62-89)                  in ONE mapInArrow pass (numpy)
   (no merge — filters stay disjoint,         bitwise-OR / max / add merge,
@@ -23,7 +27,8 @@ whole-stage codegen; Python sees int64/float64 Arrow batches only.
 
 Scale notes (100 TB / 10^12 turns, 1000 executors):
 - the scan+hash+partial-build stage is embarrassingly parallel, no shuffle
-  at all unless ``salt_partitions`` is requested;
+  at all unless ``salt_partitions`` is requested or a ``route_for`` filter
+  is at least ``ROUTE_MIN_BYTES``;
 - partials are fixed-size (sketch bytes, KB-MB each), so the merge moves
   O(P * sketch_bytes) — independent of row count. That bound is known
   from the spec params before the job runs, and it picks the merge plan
@@ -176,13 +181,17 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
 
     ``route_for`` names a BLOCKED spec — a bloom with ``block_bits`` or a
     cbf with ``block_slots`` (both pick the block from the hash's top
-    bits, so the routing expression is identical): the projection is
-    exchanged on that spec's hash-block id, so every partition's partial
+    bits, so the routing expression is identical) — to route where
+    routing pays: the projection is exchanged on that spec's hash-block
+    id into ``route_partitions`` partitions, so every partition's partial
     touches only its own cache-resident blocks —
     the reference's `hmin % q` minimizer routing (SkmerExtractor.cpp:164)
     as an explicit Spark repartition. Routing exists purely to shrink the
-    per-task working set from m_bits to ~m_bits/P (measured: the unrouted
-    build is memory-bandwidth-bound at m >= 2^27).
+    per-task working set from m_bits to ~m_bits/P, so it runs only when
+    the spec's ``wire_bytes_bound`` is at least ``ROUTE_MIN_BYTES``.
+    Below that the filter fits in cache and the build is exactly the
+    ``route_for=None`` build: no exchange, ``route_partitions`` unused,
+    and the spec's bound counted once per partition.
 
     However the rows are partitioned (routed, salted or as they come) and
     however the partials are merged, a ``merge_exact`` kind merges to the
@@ -199,11 +208,6 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
         raise ValueError(f"duplicate spec names in {names}")
     if route_for is not None and route_for not in names:
         raise ValueError(f"route_for={route_for!r} names no spec of {names}")
-    cols, col_index = _dedup_projection(specs)
-    if group_col is not None:
-        # the key rides last, so the spec column indices do not move
-        cols.append(F.col(group_col).cast("string").alias("_g"))
-    proj = df.select(*cols)
     if route_for:
         spec = specs[names.index(route_for)]
         bb = int(spec.params.get("block_bits", 0) or spec.params.get("block_slots", 0))
@@ -212,6 +216,14 @@ def build_partials(df: DataFrame, specs: list[SketchSpec],
             raise ValueError(
                 "route_for requires a blocked spec (bloom block_bits / cbf block_slots)")
         nb_log2 = int(math.log2(mb // bb))
+        if sketch_class(spec.kind).wire_bytes_bound(**spec.params) < ROUTE_MIN_BYTES:
+            route_for = None  # the filter fits in cache: the exchange buys nothing
+    cols, col_index = _dedup_projection(specs)
+    if group_col is not None:
+        # the key rides last, so the spec column indices do not move
+        cols.append(F.col(group_col).cast("string").alias("_g"))
+    proj = df.select(*cols)
+    if route_for:
         block = F.shiftrightunsigned(F.col(f"_c{col_index[route_for]}"), 64 - nb_log2)
         nparts = route_partitions or df.sparkSession.sparkContext.defaultParallelism
         proj = proj.repartition(nparts, block)
@@ -306,6 +318,15 @@ def _merge_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
 # the m = 2^29 (64 MiB) Bloom builds, which the 32-core box has not been
 # measured on.
 DRIVER_FOLD_MAX_BYTES = 32 << 20
+
+# The smallest ``route_for`` spec (by ``wire_bytes_bound``) that is routed.
+# The exchange costs a second stage whatever the size; it pays only once
+# an unrouted task's whole filter no longer fits in cache (Putze et al.'s
+# cache-blocking argument). On 4 cores (``make route-cutoff``, CHANGES.md)
+# the routed 5-spec build was the faster from a Bloom of m = 2^26 and a
+# CBF of 2^21 slots (both 8 MiB), and at m = 2^25 only over 100k rows
+# (over 1M rows the unrouted one was the faster there).
+ROUTE_MIN_BYTES = 8 << 20
 
 
 def partial_wire_bytes(specs: list[SketchSpec],

@@ -116,3 +116,56 @@ def test_a_failed_epoch_is_kept_beside_the_pooled_median():
                                                 "times": [1.0, 3.0]}])
     assert level["sec"] == 2.0
     assert level["epoch_times"] == [{"error": 1}, [1.0, 3.0]]
+
+
+class _StubProc:
+    def __init__(self, hangs: bool = False):
+        self.calls: list[str] = []
+        self.hangs = hangs
+        self.stdin = self
+
+    def close(self):
+        self.calls.append("stdin.close")
+
+    def wait(self, timeout=None):
+        self.calls.append("wait")
+        if self.hangs and "kill" not in self.calls:
+            raise subprocess.TimeoutExpired("java", timeout)
+        return 0
+
+    def kill(self):
+        self.calls.append("kill")
+
+
+class _StubGateway:
+    def __init__(self, proc: _StubProc):
+        self.proc = proc
+
+    def shutdown(self):
+        self.proc.calls.append("shutdown")
+
+
+class _StubSession:
+    def __init__(self, proc: _StubProc):
+        self.proc = proc
+
+    def stop(self):
+        self.proc.calls.append("stop")
+
+
+@pytest.mark.parametrize("hangs, calls", [
+    (False, ["stop", "shutdown", "stdin.close", "wait"]),
+    (True, ["stop", "shutdown", "stdin.close", "wait", "kill", "wait"]),
+])
+def test_query_phase_jvm_is_ended_and_waited_for(monkeypatch, hangs, calls):
+    """The query phase's JVM does not stay resident through the build and
+    scaling phases: the session stops, the gateway shuts down, and the JVM
+    process is waited for (killed if it does not exit)."""
+    from pyspark import SparkContext
+
+    proc = _StubProc(hangs)
+    monkeypatch.setattr(SparkContext, "_gateway", _StubGateway(proc))
+    monkeypatch.setattr(SparkContext, "_jvm", object())
+    bench._stop_jvm(_StubSession(proc))
+    assert proc.calls == calls
+    assert SparkContext._gateway is None and SparkContext._jvm is None

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from bloomfilter_multithread_spark.operators import build
 from bloomfilter_multithread_spark.operators.build import (
     SketchSpec,
+    _partition_count,
     _plan_for,
     build_and_persist,
     build_partials,
@@ -66,6 +67,12 @@ def _executor_merge(df, tmp):
     return tree_merge(partials)
 
 
+def _routed(df, tmp):
+    partials = build_partials(df, SPECS, route_for="bloom", route_partitions=5)
+    assert _partition_count(partials) == 5  # the exchange on the block id
+    return tree_merge(partials)
+
+
 def _persist(df, tmp):
     build_and_persist(df, SPECS, str(tmp / "state"))
     return load_sketches(df.sparkSession, str(tmp / "state"))
@@ -99,7 +106,7 @@ def _stream_foreach_batch(df, tmp):
 SHAPES = {
     "driver_fold": _driver_fold,
     "executor_merge": _executor_merge,
-    "route_for": lambda df, tmp: build_sketches(df, SPECS, route_for="bloom"),
+    "route_for": _routed,
     "salt_partitions": lambda df, tmp: build_sketches(df, SPECS, salt_partitions=16),
     "partitions_32": lambda df, tmp: build_sketches(df.repartition(32), SPECS),
     "persist": _persist,
@@ -110,6 +117,8 @@ SHAPES = {
 }
 # shapes run with the executor merge forced: no partials fit the driver fold
 ON_EXECUTORS = {"executor_merge", "persist_executors"}
+# shapes run with routing forced: every blocked spec outgrows the cache
+ROUTED = {"route_for"}
 
 
 @pytest.fixture(scope="module")
@@ -166,6 +175,8 @@ def test_merge_shape_invariance(spark, corpus, one_partition, exact, tmp_path, m
                                 shape):
     if shape in ON_EXECUTORS:
         monkeypatch.setattr(build, "DRIVER_FOLD_MAX_BYTES", -1)
+    if shape in ROUTED:
+        monkeypatch.setattr(build, "ROUTE_MIN_BYTES", 0)
     got = SHAPES[shape](corpus, tmp_path)
     assert set(got) == {s.name for s in SPECS}
     failures = {s.name: f for s in SPECS

@@ -6,10 +6,13 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 import bench
+from bloomfilter_multithread_spark.operators import build
 from bloomfilter_multithread_spark.operators.build import (
     DRIVER_FOLD_MAX_BYTES,
+    ROUTE_MIN_BYTES,
     SketchSpec,
     _partition_count,
     _plan_for,
@@ -142,15 +145,58 @@ HLL = [SketchSpec("h", "hll", "conv_id", {"p": 10})]
 
 
 def _rdd_frame(spark, partitions: int):
-    rows = [(f"conv-{i}", f"w{i}") for i in range(40)]
-    return spark.sparkContext.parallelize(rows, partitions).toDF(["conv_id", "text"])
+    rows = [(f"conv-{i}", f"w{i}", f"t{i % 3}") for i in range(40)]
+    return spark.sparkContext.parallelize(rows, partitions).toDF(["conv_id", "text", "tool"])
 
 
-def test_partition_count_of_a_routed_exchange(spark, corpus):
+def test_partition_count_of_a_routed_exchange(spark, corpus, monkeypatch):
+    monkeypatch.setattr(build, "ROUTE_MIN_BYTES", 0)
     specs = HLL + [SketchSpec("b", "bloom", "text",
                               {"m_bits": 1 << 16, "k": 3, "block_bits": 1 << 10})]
     partials = build_partials(corpus, specs, route_for="b", route_partitions=7)
     assert _partition_count(partials) == 7
+
+
+# ------------------------------------- routing sized to the filter (plan only)
+
+
+def test_perfbench_build_plans_no_exchange(spark):
+    """perfbench's m = 2^20 Bloom fits in cache: its ``route_for`` build is
+    the unrouted build, as many partitions as its input."""
+    specs = _perfbench_specs()
+    assert sketch_class("bloom").wire_bytes_bound(**specs[0].params) < ROUTE_MIN_BYTES
+    partials = build_partials(_rdd_frame(spark, 3), specs, route_for="bloom_text",
+                              route_partitions=7)
+    assert _partition_count(partials) == 3
+
+
+def test_bench_headline_build_plans_the_exchange(spark):
+    specs = bench._specs()
+    assert specs[0].params["m_bits"] == 1 << 29
+    partials = build_partials(_rdd_frame(spark, 3), specs, route_for="bloom_text",
+                              route_partitions=7)
+    assert _partition_count(partials) == 7
+
+
+def test_bench_scaling_build_plans_the_exchange(spark):
+    df = _rdd_frame(spark, 3).select(F.xxhash64("text").alias("shingle_hash"))
+    partials = build_partials(df, _shingle_specs(), route_for="bloom_shingle",
+                              route_partitions=bench.SCALE_PARTITIONS)
+    assert _partition_count(partials) == bench.SCALE_PARTITIONS
+
+
+def test_skipped_route_counts_its_spec_per_partition(spark):
+    """A blocked Bloom below the cut-off, named by ``route_for``, is built
+    unrouted, so each of the 32 partitions may carry the whole filter:
+    2 MiB each at m = 2^24, past the driver fold's cut-off in total."""
+    specs = HLL + [SketchSpec("b", "bloom", "text",
+                              {"m_bits": 1 << 24, "k": 7, "block_bits": 1 << 20})]
+    partials = build_partials(_rdd_frame(spark, 32), specs, route_for="b", route_partitions=7)
+    assert _partition_count(partials) == 32
+    meta = partials.schema["sketch"].metadata
+    assert (meta["wire_bytes_per_partition"], meta["wire_bytes_once"]) == partial_wire_bytes(specs)
+    assert 32 * meta["wire_bytes_per_partition"] > DRIVER_FOLD_MAX_BYTES
+    assert _plan_for(partials) == "executors"
 
 
 def test_partition_count_of_a_parquet_scan(spark, tmp_path):

@@ -19,8 +19,10 @@ from bloomfilter_multithread_spark.functions.shingles import (
     duckdb_shingles_cte,
     explode_shingles,
 )
+from bloomfilter_multithread_spark.operators import build
 from bloomfilter_multithread_spark.operators.build import (
     SketchSpec,
+    _partition_count,
     build_partials,
     build_sketches,
     tree_merge,
@@ -28,6 +30,15 @@ from bloomfilter_multithread_spark.operators.build import (
     with_might_contain,
 )
 from bloomfilter_multithread_spark.sources.transcripts import synth_query_set
+
+
+def _routed_build(df, specs, route_for, partitions=5):
+    """``build_sketches`` with ``route_for`` routed whatever its size
+    (``ROUTE_MIN_BYTES`` lowered to 0 by the caller), checking that the
+    plan has the exchange on the block id."""
+    partials = build_partials(df, specs, route_for=route_for, route_partitions=partitions)
+    assert _partition_count(partials) == partitions
+    return tree_merge(partials)
 
 
 def _random_hashes(n: int) -> list[int]:
@@ -195,7 +206,7 @@ class TestBuildMergeProbe:
         assert abs(sk["h"].estimate() - 100) <= 100 * 3 * sk["h"].rel_error_bound()
         assert 45 <= sk["k"].quantile(0.5) <= 55
 
-    def test_dedup_projection_build_identity(self, spark, corpus):
+    def test_dedup_projection_build_identity(self, spark, corpus, monkeypatch):
         """Sketches built through a shared projected column are identical
         to independent single-spec builds — including when route_for's
         column is the shared one (the routed exchange keys off the
@@ -221,8 +232,8 @@ class TestBuildMergeProbe:
         # routed: the exchange keys off the SHARED column; only the
         # partition-INVARIANT sketches are compared (kll/tdigest are
         # merge-order-sensitive by design, see partition_count_invariance)
-        routed = build_sketches(corpus, [b_spec, h_spec, kll_spec, td_spec],
-                                route_for="b")
+        monkeypatch.setattr(build, "ROUTE_MIN_BYTES", 0)
+        routed = _routed_build(corpus, [b_spec, h_spec, kll_spec, td_spec], "b")
         assert np.array_equal(routed["b"].bits, solo["b"].bits)
         assert np.array_equal(routed["h"].registers, solo["h"].registers)
 
@@ -251,29 +262,27 @@ class TestShingleSQLParity:
         ]
 
 
-def test_routed_blocked_build_equals_unrouted(spark, corpus):
+def test_routed_blocked_build_equals_unrouted(spark, corpus, monkeypatch):
     """Routing by hash-block must not change the merged sketch (merge is
     associative+commutative) — the reference-routing re-expression."""
-    from bloomfilter_multithread_spark.operators.build import SketchSpec, build_sketches
-
     spec = [SketchSpec("b", "bloom", "text",
                        {"m_bits": 1 << 20, "k": 5, "block_bits": 1 << 16})]
     plain = build_sketches(corpus, spec)
-    routed = build_sketches(corpus, spec, route_for="b")
+    monkeypatch.setattr(build, "ROUTE_MIN_BYTES", 0)
+    routed = _routed_build(corpus, spec, "b")
     assert plain["b"].to_bytes() == routed["b"].to_bytes()
 
 
-def test_routed_blocked_cbf_build_equals_unrouted(spark, corpus):
+def test_routed_blocked_cbf_build_equals_unrouted(spark, corpus, monkeypatch):
     """route_for generalizes to the blocked CBF (block_slots): the routed
     exchange must not change the merged counters (counter-add merge is
     associative+commutative), and the retraction subtract works on the
     routed-build result."""
-    from bloomfilter_multithread_spark.operators.build import SketchSpec, build_sketches
-
     spec = [SketchSpec("c", "cbf", "text",
                        {"m_slots": 1 << 20, "k": 5, "block_slots": 1 << 16})]
     plain = build_sketches(corpus, spec)
-    routed = build_sketches(corpus, spec, route_for="c")
+    monkeypatch.setattr(build, "ROUTE_MIN_BYTES", 0)
+    routed = _routed_build(corpus, spec, "c")
     assert plain["c"].to_bytes() == routed["c"].to_bytes()
     # retraction on the routed result: subtract the whole corpus -> empty
     empty = routed["c"].subtract(plain["c"])
