@@ -47,8 +47,9 @@ submit-demo-cluster: dist
 	  --bloom-key text --capacity 200000 --blocked --route \
 	  --state /tmp/sketch_state_demo_cluster
 
+# the Tier-1 command of ROADMAP.md, verbatim
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -41,10 +41,11 @@ Scale notes (100 TB / 10^12 turns, 1000 executors):
 
 from __future__ import annotations
 
+import json
 import math
 import uuid
 from dataclasses import dataclass, field
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -53,7 +54,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sketches import MergeableSketch, sketch_class
-from ..sketches.base import merge_all
 
 
 @dataclass
@@ -284,10 +284,10 @@ def _partials_batch(keys: list[tuple[str | None, str]], n_rows: list[int],
     )
 
 
-def _merge_batches(batches: Iterator[pa.RecordBatch],
-                   partition_id: int) -> Iterator[pa.RecordBatch]:
-    """Arrow-side combiner: folds all partial rows of ``batches`` into
-    one row per (group_key, spec_name), in row order."""
+def _fold(batches: Iterable[pa.RecordBatch]) -> tuple[dict, dict]:
+    """The one fold of partials: every ``PARTIAL_DDL`` row of ``batches``
+    merged into one sketch per (group_key, spec_name), in row order, with
+    the summed ``n_rows`` of each key: (key -> sketch, key -> n_rows)."""
     acc: dict[tuple[str | None, str], MergeableSketch] = {}
     n_rows: dict[tuple[str | None, str], int] = {}
     for batch in batches:
@@ -298,13 +298,23 @@ def _merge_batches(batches: Iterator[pa.RecordBatch],
             sk = MergeableSketch.from_bytes(blobs[i].as_py())
             acc[key] = sk if key not in acc else acc[key].merge(sk)
             n_rows[key] = n_rows.get(key, 0) + (counts[i] or 0)
+    return acc, n_rows
+
+
+def _fold_by_spec(batches: Iterable[pa.RecordBatch]) -> dict[str, MergeableSketch]:
+    """``_fold`` of ungrouped partials, keyed by spec name."""
+    return {name: sk for (_, name), sk in _fold(batches)[0].items()}
+
+
+def _merge_batches(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """``_fold`` emitted as one ``PARTIAL_DDL`` batch, stamped with the
+    task's partition id (0 on the driver): the executors' combiner, and
+    the driver's before it writes a state."""
+    acc, n_rows = _fold(batches)
+    ctx = TaskContext.get()
     if acc:
         yield _partials_batch(list(acc), [n_rows[k] for k in acc], list(acc.values()),
-                              partition_id)
-
-
-def _merge_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    return _merge_batches(batches, TaskContext.get().partitionId())
+                              ctx.partitionId() if ctx else 0)
 
 
 # ------------------------------------------------------------ merge plan
@@ -391,37 +401,48 @@ def _plan_partitions(node) -> int | None:
     return sum(counts)
 
 
-def _plan_for(partials: DataFrame) -> str:
-    """``merge_plan`` for a ``build_partials`` result: its spec bounds
-    ride on the sketch column's metadata, P is its partition count. Other
-    partial frames (no metadata) take the executor merge."""
+def _wire_bytes(partials: DataFrame) -> int | None:
+    """The bound on a ``build_partials`` result's partials: its spec
+    bounds ride on the sketch column's metadata, P is its partition count.
+    None (unknown) for other partial frames, or when P is unknown."""
     meta = partials.schema["sketch"].metadata
-    wire_bytes = None
-    if "wire_bytes_per_partition" in meta:
-        p = _partition_count(partials)
-        if p is not None:
-            wire_bytes = meta["wire_bytes_once"] + p * meta["wire_bytes_per_partition"]
-    return merge_plan(wire_bytes)
+    p = _partition_count(partials) if "wire_bytes_per_partition" in meta else None
+    return None if p is None else meta["wire_bytes_once"] + p * meta["wire_bytes_per_partition"]
+
+
+def _plan_for(partials: DataFrame) -> str:
+    """``merge_plan`` for a ``build_partials`` result (``_wire_bytes``);
+    a frame of unknown bound takes the executor merge."""
+    return merge_plan(_wire_bytes(partials))
 
 
 def _executor_merge(partials: DataFrame) -> DataFrame:
     """Fold partials on the executors to one row per (group_key,
     spec_name): one exchange on that key, then ``_merge_batches`` in each
     task. The global and the grouped build both merge this way."""
-    return partials.repartition("group_key", "spec_name").mapInArrow(_merge_task, PARTIAL_DDL)
+    return partials.repartition("group_key", "spec_name").mapInArrow(_merge_batches, PARTIAL_DDL)
+
+
+def _planned_batches(partials: DataFrame, wire_bytes: int | None) -> list[pa.RecordBatch]:
+    """``partials`` on the driver as Arrow batches for ``_fold``, merged
+    where ``merge_plan(wire_bytes)`` says: as they are for the driver
+    fold, else after ``_executor_merge``, one row per (group_key,
+    spec_name). ``tree_merge``, a stream epoch and a checkpoint resume
+    all merge through here."""
+    if merge_plan(wire_bytes) == "executors":
+        partials = _executor_merge(partials)
+    return partials.toArrow().to_batches()
 
 
 def tree_merge(partials: DataFrame) -> dict[str, MergeableSketch]:
     """Merge partial sketches into one sketch per spec — the merge
     primitive the reference lacks (its q filters stay disjoint forever,
     main.cpp:119-127). ``merge_plan`` picks where: on the driver, the
-    P partials are collected and folded here, with no shuffle and no
-    merge task; on the executors, each spec's partials are folded in one
-    task (``_executor_merge``) and the driver collects one row per spec.
-    Either way the rows come to the driver over Arrow."""
-    if _plan_for(partials) == "executors":
-        partials = _executor_merge(partials)
-    return merge_partials_local(partials.toArrow().to_pylist())
+    P partials come over Arrow and ``_fold`` merges them here, with no
+    shuffle and no merge task; on the executors, each spec's partials
+    are folded in one task (``_executor_merge``) and the driver reads one
+    row per spec."""
+    return _fold_by_spec(_planned_batches(partials, _wire_bytes(partials)))
 
 
 def build_and_persist(df: DataFrame, specs: list[SketchSpec], path: str,
@@ -433,13 +454,13 @@ def build_and_persist(df: DataFrame, specs: list[SketchSpec], path: str,
     ``merge_plan``: on the driver, the driver merges the small partials
     and writes the state in one task; on the executors, the executors
     write it and the driver never ingests the merged blobs (at m = 2^29+
-    the collect is seconds of serial time a cluster job shouldn't pay).
+    the collect is seconds of serial time a cluster job shouldn't pay),
+    which is why this surface does not go through ``_planned_batches``.
     This is the scale-correct form of the reference's stubbed binary sink
     (main.cpp:233-239)."""
     partials = build_partials(df, specs, route_for=route_for, route_partitions=route_partitions)
     if _plan_for(partials) == "driver":
-        # the executors' combiner, run here over the collected partials
-        folded = _merge_batches(partials.toArrow().to_batches(), 0)
+        folded = _merge_batches(partials.toArrow().to_batches())
         table = pa.Table.from_batches(list(folded), schema=_PARTIAL_SCHEMA)
         state = df.sparkSession.createDataFrame(table).coalesce(1)
     else:
@@ -449,14 +470,16 @@ def build_and_persist(df: DataFrame, specs: list[SketchSpec], path: str,
 
 def load_sketches(spark, path: str, names: list[str] | None = None
                   ) -> dict[str, MergeableSketch]:
-    """Load merged sketches from a ``build_and_persist`` state dir,
-    optionally only the named specs (predicate pushes to the parquet scan).
-    The schema is given, so the load runs no schema-inference job; a state
-    written before ``group_key`` existed reads it as null."""
+    """Load merged sketches from a ``PARTIAL_DDL`` state: a
+    ``build_and_persist`` dir or a stream's ``state.parquet``, optionally
+    only the named specs (predicate pushes to the parquet scan). The rows
+    come over Arrow into ``_fold``. The schema is given, so the load runs
+    no schema-inference job; a state written before ``group_key`` existed
+    reads it as null."""
     df = spark.read.schema(PARTIAL_DDL).parquet(path)
     if names:
         df = df.where(F.col("spec_name").isin(list(names)))
-    return merge_partials_local(df.collect())
+    return _fold_by_spec(df.toArrow().to_batches())
 
 
 def build_sketches(df: DataFrame, specs: list[SketchSpec],
@@ -468,12 +491,19 @@ def build_sketches(df: DataFrame, specs: list[SketchSpec],
 
 
 def merge_partials_local(partial_rows) -> dict[str, MergeableSketch]:
-    """Driver-side fold of collected partial rows (used by checkpoint
-    resume where partials are already tiny local objects)."""
-    by_name: dict[str, list[bytes]] = {}
-    for r in partial_rows:
-        by_name.setdefault(r["spec_name"], []).append(bytes(r["sketch"]))
-    return {k: merge_all(v) for k, v in by_name.items()}
+    """``_fold`` of collected ``PARTIAL_DDL`` ``Row``s, one sketch per spec.
+    The engine itself never collects ``Row``s; this wrapper is kept only
+    because the benchmark's tamper check (``perfbench/workloads.py``)
+    folds collected rows with it."""
+    return _fold_by_spec(pa.Table.from_pylist([r.asDict() for r in partial_rows],
+                                              schema=_PARTIAL_SCHEMA).to_batches())
+
+
+def _spec_signature(specs: list[SketchSpec]) -> list:
+    """``[name, kind, params]`` per spec as JSON stores it: what a
+    persisted state records of the specs it was built with, so that a
+    resume with other specs fails instead of mixing builds."""
+    return json.loads(json.dumps([[s.name, s.kind, s.params] for s in specs]))
 
 
 # ---------------------------------------------------------------- probe

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..sketches import MergeableSketch
-from .build import SketchSpec, _executor_merge, build_partials
+from .build import SketchSpec, _executor_merge, _fold, build_partials
 
 
 def build_sketches_grouped(
@@ -31,10 +31,7 @@ def build_sketches_grouped(
 
 
 def collect_grouped(merged: DataFrame) -> dict[tuple[str, str], MergeableSketch]:
-    """Driver-side view: {(group_key, spec_name): sketch} — for modest
-    group counts (estimates, probe broadcast); leave the DataFrame form
-    for high-cardinality keys."""
-    return {
-        (r["group_key"], r["spec_name"]): MergeableSketch.from_bytes(bytes(r["sketch"]))
-        for r in merged.collect()
-    }
+    """Driver-side view: {(group_key, spec_name): sketch}, the merged rows
+    read over Arrow into ``_fold`` — for modest group counts (estimates,
+    probe broadcast); leave the DataFrame form for high-cardinality keys."""
+    return _fold(merged.toArrow().to_batches())[0]

@@ -2,10 +2,11 @@
 
 Re-expression of the reference's stubbed binary sink ("TODO: write in
 output file !!!", /root/reference/src/main.cpp:233-239) as a real state
-store: every per-partition partial sketch row (spec_name, partition_id,
-n_rows, sketch bytes) is written to a parquet state directory together
-with build metadata. A killed build resumes by reading completed
-partials and re-running ONLY missing partitions.
+store: every per-partition partial sketch row (``PARTIAL_DDL`` plus a
+``written_at`` stamp) is written to a parquet state directory together
+with build metadata. A killed build resumes by re-running ONLY missing
+chunks, then merges every chunk's partials where ``merge_plan`` says; a
+resume with other specs than the stored ones raises ``ValueError``.
 
 Lineage & metrics per partition: partition_id, n_rows, sketch bytes
 size, wall-time stamp of the chunk write. The merge is associative +
@@ -19,6 +20,7 @@ parquet's _SUCCESS-style rename semantics.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -26,14 +28,19 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.build import PARTIAL_DDL, SketchSpec, build_partials, merge_partials_local
+from ..operators.build import (PARTIAL_DDL, SketchSpec, _fold_by_spec, _partition_count,
+                               _planned_batches, _spec_signature, build_partials,
+                               partial_wire_bytes)
 from ..sketches import MergeableSketch
 
 
 class SketchCheckpoint:
     """State dir layout:
-    <dir>/meta.json                 build config + chunking
-    <dir>/partials/chunk=<i>/*.parquet   partial rows for input chunk i
+    <dir>/meta.json                 build config: chunking, the specs'
+                                    [name, kind, params], and each
+                                    committed chunk's partition count
+    <dir>/partials/chunk=<i>/*.parquet   ``PARTIAL_DDL`` rows for input
+                                    chunk i, plus ``written_at``
     """
 
     def __init__(self, state_dir: str):
@@ -58,15 +65,9 @@ class SketchCheckpoint:
 
     # -- chunk state -----------------------------------------------------
     def completed_chunks(self, spark: SparkSession) -> set[int]:
-        if not os.path.isdir(self.partials_dir):
-            return set()
-        done = set()
-        for name in os.listdir(self.partials_dir):
-            if name.startswith("chunk="):
-                # only count chunks whose write committed (parquet _SUCCESS)
-                if os.path.exists(os.path.join(self.partials_dir, name, "_SUCCESS")):
-                    done.add(int(name.split("=", 1)[1]))
-        return done
+        """The chunks whose write committed (parquet ``_SUCCESS``)."""
+        done = glob.glob(os.path.join(glob.escape(self.partials_dir), "chunk=*", "_SUCCESS"))
+        return {int(os.path.basename(os.path.dirname(p)).split("=", 1)[1]) for p in done}
 
     def chunk_path(self, chunk: int) -> str:
         return os.path.join(self.partials_dir, f"chunk={chunk}")
@@ -87,13 +88,17 @@ class SketchCheckpoint:
         if meta is None:
             meta = {
                 "n_chunks": n_chunks,
-                "specs": [[s.name, s.kind, s.params] for s in specs],
+                "specs": _spec_signature(specs),
                 "started_at": time.time(),
                 "chunks": {},
             }
             self.write_meta(meta)
-        else:
-            n_chunks = meta["n_chunks"]
+        elif meta["specs"] != _spec_signature(specs):
+            raise ValueError(
+                f"specs {_spec_signature(specs)} differ from the {meta['specs']} that the "
+                f"checkpoint at {self.state_dir} was built with; a resume would build the "
+                "difference from the missing chunks only. Use a fresh state_dir.")
+        n_chunks = meta["n_chunks"]
 
         done = self.completed_chunks(spark)
         chunked = df.withColumn("__chunk", F.pmod(F.xxhash64(chunk_key), F.lit(n_chunks)))
@@ -103,14 +108,24 @@ class SketchCheckpoint:
             part = build_partials(chunked.where(F.col("__chunk") == chunk).drop("__chunk"), specs)
             part = part.withColumn("written_at", F.lit(time.time()))
             part.write.mode("overwrite").parquet(self.chunk_path(chunk))
-            meta["chunks"][str(chunk)] = {"committed_at": time.time()}
+            meta["chunks"][str(chunk)] = {"committed_at": time.time(),
+                                          "partitions": _partition_count(part)}
             self.write_meta(meta)
 
         return self.merge_state(spark)
 
     def merge_state(self, spark: SparkSession) -> dict[str, MergeableSketch]:
-        rows = spark.read.parquet(os.path.join(self.partials_dir, "chunk=*")).collect()
-        return merge_partials_local(rows)
+        """Fold every committed chunk's partials where ``merge_plan`` says.
+        The bound is the stored specs' per-partition bound times the
+        partition count each chunk recorded at commit; a chunk without one
+        leaves it unknown (the executor merge)."""
+        meta = self.read_meta()
+        chunks = [meta["chunks"].get(str(c), {}).get("partitions")
+                  for c in self.completed_chunks(spark)]
+        specs = [SketchSpec(name, kind, "", params) for name, kind, params in meta["specs"]]
+        wire_bytes = None if None in chunks else sum(chunks) * partial_wire_bytes(specs)[0]
+        df = spark.read.schema(PARTIAL_DDL).parquet(os.path.join(self.partials_dir, "chunk=*"))
+        return _fold_by_spec(_planned_batches(df, wire_bytes))
 
     def lineage(self, spark: SparkSession) -> DataFrame:
         """Per-partition lineage + metrics: one row per (chunk, partition,

@@ -7,11 +7,15 @@ the genuinely-new streaming surface the mergeable-sketch design enables:
 
 - ``StreamingSketchBuilder``: readStream -> foreachBatch -> per-batch
   partial build (the same one-pass ``build_partials`` as batch) ->
-  merge-into-state. Because every sketch merge is associative +
-  commutative + idempotent-on-replay *at the batch level* (we commit
-  per-epoch markers), a restart replays at most one epoch and converges
-  to the identical sketch a batch build over the full input produces
-  (asserted bit-exactly for Bloom/HLL/CMS in tests).
+  merge-into-state: the previous state and the batch's partials go
+  through the batch build's one ``_fold``, with the partials merged on
+  the executors first when ``merge_plan`` says so. The state is one
+  ``PARTIAL_DDL`` parquet file, ``<state_dir>/state.parquet``, written by
+  the driver and readable with ``load_sketches``. Because every sketch
+  merge is associative + commutative + idempotent-on-replay *at the
+  batch level* (we commit per-epoch markers), a restart replays at most
+  one epoch and converges to the identical sketch a batch build over the
+  full input produces (asserted bit-exactly for Bloom/HLL/CMS in tests).
 - ``running_distinct_per_key``: custom stateful operator via
   ``applyInPandasWithState`` — a per-key running mergeable sketch (HLL
   registers or a KMV envelope, ``kind=``) kept in GroupState, emitting
@@ -20,7 +24,9 @@ the genuinely-new streaming surface the mergeable-sketch design enables:
   data, straight from the built-in surface.
 
 Scale notes: foreachBatch state is O(specs * sketch_bytes) regardless of
-stream length; the per-batch shuffle is only the tiny partials exchange.
+stream length; a batch's partials cross to the driver only when their
+bound is within ``DRIVER_FOLD_MAX_BYTES``, else they are merged on the
+executors first (one row per spec).
 At 10^12 turns the same pipeline runs continuously with
 ``trigger(processingTime=...)`` on a real cluster; tests use
 ``trigger(availableNow=True)`` for bounded determinism.
@@ -30,16 +36,19 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
+from itertools import chain
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.build import SketchSpec, build_partials, merge_partials_local
+from ..operators.build import (SketchSpec, _PARTIAL_SCHEMA, _fold_by_spec, _merge_batches,
+                               _planned_batches, _spec_signature, _wire_bytes, build_partials)
 from ..sketches import MergeableSketch
 
 
@@ -47,12 +56,19 @@ class StreamingSketchBuilder:
     """Maintains one merged sketch per spec across micro-batches.
 
     State layout (local or any shared FS):
-      <state_dir>/state.json   {"epoch": N, "sketches": {name: hex}}
-    written atomically (tmp + rename). ``foreach_batch`` is idempotent
-    per epoch: a replayed epoch (restart after crash between state write
-    and checkpoint commit) is detected and skipped, so state never
-    double-counts a batch even though sketch merge itself is not
-    idempotent for CMS.
+      <state_dir>/state.parquet   one ``PARTIAL_DDL`` row per spec; the
+                                  schema metadata holds the last merged
+                                  epoch, the owning checkpoint and the
+                                  specs' ``[name, kind, params]``
+    written by the driver with pyarrow, atomically (tmp + rename), and
+    readable with ``load_sketches``. Each epoch folds the previous state
+    and the batch's partials in one ``_fold``; the partials are merged on
+    the executors first when their bound says so (``merge_plan``), as in
+    a batch build. ``foreach_batch`` is idempotent per epoch: a replayed
+    epoch (restart after crash between state write and checkpoint commit)
+    is detected and skipped, so state never double-counts a batch even
+    though sketch merge itself is not idempotent for CMS. A state built
+    with other specs, or by another checkpoint, raises ``ValueError``.
     """
 
     def __init__(self, specs: list[SketchSpec], state_dir: str):
@@ -62,38 +78,27 @@ class StreamingSketchBuilder:
         os.makedirs(state_dir, exist_ok=True)
 
     @property
-    def _state_path(self) -> str:
-        return os.path.join(self.state_dir, "state.json")
+    def state_path(self) -> str:
+        return os.path.join(self.state_dir, "state.parquet")
 
     def load_state(self) -> tuple[int, dict[str, MergeableSketch]]:
-        epoch, sketches, _ = self._load_raw()
-        return epoch, sketches
+        epoch, batches, _ = self._load_raw()
+        return epoch, _fold_by_spec(batches)
 
-    def _load_raw(self) -> tuple[int, dict[str, MergeableSketch], str | None]:
+    def _load_raw(self) -> tuple[int, list[pa.RecordBatch], dict[bytes, bytes]]:
+        if os.path.exists(os.path.join(self.state_dir, "state.json")):
+            raise ValueError(
+                f"{self.state_dir} holds a state.json, the hex-encoded state format this "
+                "version no longer reads: rebuild the stream into a fresh state_dir")
         try:
-            with open(self._state_path) as f:
-                raw = json.load(f)
+            table = pq.read_table(self.state_path)
         except FileNotFoundError:
-            return -1, {}, None
-        sketches = {
-            k: MergeableSketch.from_bytes(bytes.fromhex(v))
-            for k, v in raw["sketches"].items()
-        }
-        return raw["epoch"], sketches, raw.get("checkpoint")
-
-    def _write_state(self, epoch: int, sketches: dict[str, MergeableSketch]) -> None:
-        payload = {
-            "epoch": epoch,
-            "checkpoint": self._checkpoint,
-            "sketches": {k: v.to_bytes().hex() for k, v in sketches.items()},
-        }
-        fd, tmp = tempfile.mkstemp(dir=self.state_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, self._state_path)
+            return -1, [], {}
+        return int(table.schema.metadata[b"epoch"]), table.to_batches(), table.schema.metadata
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        last_epoch, state, owner = self._load_raw()
+        last_epoch, state, meta = self._load_raw()
+        owner = meta.get(b"checkpoint", b"").decode() or None
         # The epoch-replay guard assumes epoch ids grow within ONE
         # checkpointed query. Reusing a state_dir with a NEW checkpoint
         # restarts epoch ids at 0, which the guard would silently treat
@@ -104,13 +109,25 @@ class StreamingSketchBuilder:
                 f"this query uses {self._checkpoint!r} — resuming would silently "
                 "skip batches. Use a fresh state_dir (or the original checkpoint)."
             )
+        specs = _spec_signature(self.specs)
+        if meta and json.loads(meta[b"specs"]) != specs:
+            raise ValueError(
+                f"specs {specs} differ from the {json.loads(meta[b'specs'])} that the state at "
+                f"{self.state_dir} was built with; an added spec would cover only the later "
+                "epochs. Use a fresh state_dir.")
         if epoch_id <= last_epoch:
             return  # replayed epoch after restart — already merged
-        rows = build_partials(batch_df, self.specs).collect()
-        delta = merge_partials_local(rows)
-        for name, sk in delta.items():
-            state[name] = sk if name not in state else state[name].merge(sk)
-        self._write_state(epoch_id, state)
+        partials = build_partials(batch_df, self.specs)
+        folded = _merge_batches(chain(state, _planned_batches(partials, _wire_bytes(partials))))
+        schema = _PARTIAL_SCHEMA.with_metadata(
+            {"epoch": str(epoch_id), "checkpoint": self._checkpoint or "", "specs": json.dumps(specs)})
+        tmp = self.state_path + ".tmp"
+        # no dictionary or min/max statistics: each blob is one unique
+        # value, and both cost a pass over it (for a 64 MiB Bloom blob on
+        # a 4-core VM, 0.33 -> 0.11 s)
+        pq.write_table(pa.Table.from_batches(folded, schema), tmp, use_dictionary=False,
+                       write_statistics=False)
+        os.replace(tmp, self.state_path)
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str, available_now: bool = True):
         self._checkpoint = checkpoint_dir

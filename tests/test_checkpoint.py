@@ -9,6 +9,8 @@ import os
 import shutil
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bloomfilter_multithread_spark.operators.build import (
@@ -86,3 +88,13 @@ def test_load_sketches_reads_a_state_without_group_key(spark, corpus, tmp_path):
     assert set(got) == set(want) == {s.name for s in _specs()}
     for name in want:
         assert got[name].to_bytes() == want[name].to_bytes(), name
+
+
+def test_resume_with_other_specs_raises(spark, corpus, tmp_path):
+    """A spec added on resume would be built from the missing chunks only."""
+    ck = SketchCheckpoint(str(tmp_path / "ck"))
+    ck.build_resumable(corpus, _specs(), n_chunks=3, chunk_key="conv_id")
+    shutil.rmtree(ck.chunk_path(1))
+    grown = _specs() + [SketchSpec("k", "kll", "length(text)", {"k": 64})]
+    with pytest.raises(ValueError, match="differ"):
+        ck.build_resumable(corpus, grown, n_chunks=3, chunk_key="conv_id")

@@ -114,9 +114,12 @@ SHAPES = {
     "grouped_one_group": _grouped_one_group,
     "checkpoint_resume": _checkpoint_resume,
     "stream_foreach_batch": _stream_foreach_batch,
+    "checkpoint_executors": _checkpoint_resume,
+    "stream_executors": _stream_foreach_batch,
 }
 # shapes run with the executor merge forced: no partials fit the driver fold
-ON_EXECUTORS = {"executor_merge", "persist_executors"}
+ON_EXECUTORS = {"executor_merge", "persist_executors", "checkpoint_executors",
+                "stream_executors"}
 # shapes run with routing forced: every blocked spec outgrows the cache
 ROUTED = {"route_for"}
 

@@ -4,6 +4,8 @@ before any job runs."""
 
 from __future__ import annotations
 
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -21,8 +23,10 @@ from bloomfilter_multithread_spark.operators.build import (
     merge_plan,
     partial_wire_bytes,
 )
+from bloomfilter_multithread_spark.plans.checkpoint import SketchCheckpoint
 from bloomfilter_multithread_spark.sketches import sketch_class
 from bloomfilter_multithread_spark.sketches.bloom import optimal_params
+from bloomfilter_multithread_spark.streaming.sketch_stream import StreamingSketchBuilder
 
 # ------------------------------------------------------------ plan (no Spark)
 
@@ -227,6 +231,51 @@ def test_unknown_leaf_takes_the_executor_merge(spark):
     partials = build_partials(df, HLL)
     assert _partition_count(partials) is None
     assert _plan_for(partials) == "executors"
+
+
+# ------------------------- stream epoch and checkpoint resume (plan + run)
+
+
+def _spy_on_executor_merge(monkeypatch) -> list:
+    calls = []
+    real = build._executor_merge
+    monkeypatch.setattr(build, "_executor_merge", lambda p: calls.append(p) or real(p))
+    return calls
+
+
+# the cut-off set at the bound (driver fold) or one byte below it
+CUTS = pytest.mark.parametrize("cut,on_executors", [(0, False), (-1, True)],
+                               ids=["at_bound", "below_bound"])
+
+
+@CUTS
+def test_stream_epoch_follows_the_merge_plan(spark, corpus, tmp_path, monkeypatch, cut,
+                                             on_executors):
+    """An epoch's partials are bounded like a batch build's: P partitions
+    times the specs' per-partition bound."""
+    bound = _partition_count(corpus) * partial_wire_bytes(HLL)[0]
+    monkeypatch.setattr(build, "DRIVER_FOLD_MAX_BYTES", bound + cut)
+    calls = _spy_on_executor_merge(monkeypatch)
+    builder = StreamingSketchBuilder(HLL, str(tmp_path / "stream"))
+    builder.foreach_batch(corpus, 0)
+    assert len(calls) == (1 if on_executors else 0)
+    assert builder.load_state()[1]["h"].estimate() > 0
+
+
+@CUTS
+def test_checkpoint_resume_follows_the_merge_plan(spark, corpus, tmp_path, monkeypatch, cut,
+                                                  on_executors):
+    """A resume's partials are bounded by the partition count each chunk
+    recorded at commit, though the chunk files carry no bound."""
+    ck = SketchCheckpoint(str(tmp_path / "ck"))
+    ck.build_resumable(corpus, HLL, n_chunks=2, chunk_key="conv_id")
+    shutil.rmtree(ck.chunk_path(1))
+    bound = 2 * _partition_count(corpus) * partial_wire_bytes(HLL)[0]
+    monkeypatch.setattr(build, "DRIVER_FOLD_MAX_BYTES", bound + cut)
+    calls = _spy_on_executor_merge(monkeypatch)
+    got = ck.build_resumable(corpus, HLL, n_chunks=2, chunk_key="conv_id")
+    assert len(calls) == (1 if on_executors else 0)
+    assert got["h"].estimate() > 0
 
 
 # ------------------------------------------------------------------ misuse

@@ -5,6 +5,7 @@ and watermarked windowed aggregation runs end-to-end."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -12,7 +13,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bloomfilter_multithread_spark.operators.build import SketchSpec, build_sketches
+from bloomfilter_multithread_spark.operators.build import (
+    SketchSpec,
+    build_sketches,
+    load_sketches,
+)
 from bloomfilter_multithread_spark.sources.transcripts import synth_transcripts
 from bloomfilter_multithread_spark.streaming.sketch_stream import (
     StreamingSketchBuilder,
@@ -100,6 +105,37 @@ def test_state_dir_reuse_with_new_checkpoint_raises(spark, tmp_path, stream_inpu
         builder2.build_available(stream2, str(tmp_path / "ckpt-DIFFERENT"))
         # foreachBatch errors surface via the streaming query
     assert "checkpoint" in str(exc_info.value)
+
+
+def test_stream_spec_change_raises(spark, tmp_path, stream_input):
+    """A spec added mid-stream would cover only the later epochs."""
+    df, a, b, *_ = stream_input
+    StreamingSketchBuilder(_specs(), str(tmp_path / "state")).foreach_batch(a, epoch_id=0)
+    grown = _specs() + [SketchSpec("kll_len", "kll", "length(text)", {"k": 64})]
+    with pytest.raises(ValueError, match="differ"):
+        StreamingSketchBuilder(grown, str(tmp_path / "state")).foreach_batch(b, epoch_id=1)
+
+
+def test_old_hex_state_raises_rebuild(tmp_path):
+    state_dir = tmp_path / "state"
+    state_dir.mkdir()
+    (state_dir / "state.json").write_text(json.dumps({"epoch": 0, "sketches": {}}))
+    with pytest.raises(ValueError, match="rebuild"):
+        StreamingSketchBuilder(_specs(), str(state_dir)).load_state()
+
+
+def test_load_sketches_reads_the_stream_state(spark, tmp_path, stream_input):
+    df, a, b, *_ = stream_input
+    builder = StreamingSketchBuilder(_specs(), str(tmp_path / "state"))
+    builder.foreach_batch(a, epoch_id=0)
+    builder.foreach_batch(b, epoch_id=1)
+    epoch, want = builder.load_state()
+    got = load_sketches(spark, builder.state_path)
+    assert epoch == 1
+    assert set(got) == set(want) == {s.name for s in _specs()}
+    for name in want:
+        assert got[name].to_bytes() == want[name].to_bytes(), name
+    assert set(load_sketches(spark, builder.state_path, ["hll_conv"])) == {"hll_conv"}
 
 
 def test_running_distinct_per_key(spark, tmp_path):
