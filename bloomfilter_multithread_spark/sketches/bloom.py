@@ -30,8 +30,9 @@ from .base import (ARRAY_PREFIX_BYTES, ENVELOPE_BYTES, MergeableSketch, np_fromb
 from .hashing import double_hash_indices, to_u64, xorshift32_batch
 
 _U64 = np.uint64
-# byte-popcount lookup (numpy 1.x has no bitwise_count)
-_POP8 = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(axis=1).astype(np.int64)
+# packed bytes popcounted per slice (numpy 1.x has no bitwise_count): the
+# unpacked slice, 2 MiB, stays in cache and bounds the temporary
+_POPCOUNT_CHUNK = 1 << 18
 
 
 def optimal_params(n_items: int, target_fpr: float) -> tuple[int, int]:
@@ -245,7 +246,9 @@ class BloomSketch(MergeableSketch):
             return sum(int(np.count_nonzero(a)) for a in self._blocks.values())
         if self._ubits is not None:
             return int(np.count_nonzero(self._ubits))
-        return int(_POP8[self._packed].sum())
+        p = self._packed
+        return sum(int(np.count_nonzero(np.unpackbits(p[i:i + _POPCOUNT_CHUNK])))
+                   for i in range(0, p.size, _POPCOUNT_CHUNK))
 
     def estimate_cardinality(self) -> float:
         """Swamidass–Baldi fill-ratio cardinality estimate."""

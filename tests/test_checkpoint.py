@@ -8,14 +8,18 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+import tempfile
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bloomfilter_multithread_spark.operators import build
 from bloomfilter_multithread_spark.operators.build import (
+    PARTIAL_DDL,
     SketchSpec,
     build_and_persist,
+    build_partials,
     build_sketches,
     load_sketches,
 )
@@ -98,3 +102,95 @@ def test_resume_with_other_specs_raises(spark, corpus, tmp_path):
     grown = _specs() + [SketchSpec("k", "kll", "length(text)", {"k": 64})]
     with pytest.raises(ValueError, match="differ"):
         ck.build_resumable(corpus, grown, n_chunks=3, chunk_key="conv_id")
+
+
+def test_load_sketches_of_a_path_without_state_raises(spark, tmp_path):
+    missing = str(tmp_path / "never_written")
+    with pytest.raises(FileNotFoundError, match="never_written"):
+        load_sketches(spark, missing)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    with pytest.raises(FileNotFoundError, match="empty"):
+        load_sketches(spark, str(empty))
+
+
+def test_load_sketches_of_a_missing_name_raises(spark, corpus, tmp_path):
+    path = str(tmp_path / "state")
+    build_and_persist(corpus, _specs(), path)
+    with pytest.raises(ValueError, match=r"\['nope'\].*\['b', 'c', 'h'\]"):
+        load_sketches(spark, path, ["h", "nope"])
+
+
+@pytest.fixture(scope="module")
+def parquet_corpus(spark, corpus, tmp_path_factory):
+    """The corpus read back from parquet: a frame whose partition count
+    the plan knows, so its small build takes the driver plan."""
+    path = str(tmp_path_factory.mktemp("corpus") / "corpus")
+    corpus.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _jobs(spark, group: str, run):
+    """(the number of Spark jobs ``run()`` launched, its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_driver_plan_state_io_runs_no_job_of_its_own(spark, parquet_corpus, tmp_path):
+    path = str(tmp_path / "state")
+    assert build._plan_for(build_partials(parquet_corpus, _specs())) == "driver"
+    collect, _ = _jobs(spark, "partials", lambda: build_partials(parquet_corpus, _specs())
+                       .toArrow())
+    persist, _ = _jobs(spark, "persist", lambda: build_and_persist(parquet_corpus, _specs(), path))
+    load, got = _jobs(spark, "load", lambda: load_sketches(spark, path))
+    assert persist == collect == 1
+    assert load == 0
+    want = build_sketches(parquet_corpus, _specs())
+    for name in want:
+        assert got[name].to_bytes() == want[name].to_bytes(), name
+
+
+def _data_files(path: str) -> list[str]:
+    return [n for n in os.listdir(path) if not n.startswith((".", "_"))]
+
+
+def test_driver_write_overwrites_an_executor_state(spark, parquet_corpus, tmp_path, monkeypatch):
+    path = str(tmp_path / "state")
+    with monkeypatch.context() as m:
+        m.setattr(build, "DRIVER_FOLD_MAX_BYTES", 0)
+        coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+        was = spark.conf.get(coalesce)
+        spark.conf.set(coalesce, "false")  # one part file per spec's shuffle partition
+        try:
+            build_and_persist(parquet_corpus, _specs(), path)
+        finally:
+            spark.conf.set(coalesce, was)
+    assert len(_data_files(path)) > 1
+    executor = load_sketches(spark, path)
+
+    build_and_persist(parquet_corpus, _specs(), path)
+    assert len(_data_files(path)) == 1
+    assert "_SUCCESS" in os.listdir(path)
+    rows = spark.read.schema(PARTIAL_DDL).parquet(path).toArrow()
+    assert sorted(rows["spec_name"].to_pylist()) == ["b", "c", "h"]
+    folded = build._fold_by_spec(rows.to_batches())
+    driver = load_sketches(spark, path)
+    assert set(folded) == set(driver) == set(executor)
+    for name in driver:
+        assert folded[name].to_bytes() == driver[name].to_bytes() \
+            == executor[name].to_bytes(), name
+
+
+def test_state_io_leaves_no_temp_files(spark, parquet_corpus, tmp_path, monkeypatch):
+    temp_root = tmp_path / "tmp"
+    temp_root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp_root))
+    path = str(tmp_path / "state")
+    build_and_persist(parquet_corpus, _specs(), path)
+    load_sketches(spark, path, ["h"])
+    assert os.listdir(temp_root) == []

@@ -367,6 +367,23 @@ class TestBlockedBloom:
         assert sk2.probe_hashes(np.arange(1000, dtype=np.int64)).all()
 
 
+@pytest.mark.parametrize("m_bits,block_bits,n,form", [
+    (1 << 23, 0, 3_000_000, "_packed"),  # dense blob: more than one popcount slice
+    (64, 0, 40, "_packed"),
+    (1 << 20, 0, 100, "_ubits"),  # sparse blob
+    (1 << 20, 1 << 12, 100, "_blocks"),
+])
+def test_bloom_nset_counts_the_set_bits(m_bits, block_bits, n, form):
+    """``_nset`` (which picks the wire format and drives the cardinality
+    estimate) counts the set bits of each form a blob decodes to."""
+    built = BloomSketch.create(m_bits=m_bits, k=3, block_bits=block_bits)
+    built.update_hashes(_hashes(n, seed=5))
+    sk = BloomSketch.from_bytes(built.to_bytes())
+    assert getattr(sk, form) is not None
+    nset = sk._nset()
+    assert nset == np.count_nonzero(sk.bits) == np.count_nonzero(built.bits) > 0
+
+
 def test_hll_set_algebra_bounds_and_immutability():
     """Union via register-max on copies; intersection via
     inclusion-exclusion with ADDITIVE error in |A∪B|; operands must not
