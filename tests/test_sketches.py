@@ -26,6 +26,7 @@ from bloomfilter_multithread_spark.sketches import (
     xorshift32_batch,
     xorshift32_scalar,
 )
+from bloomfilter_multithread_spark.sketches.base import ENVELOPE_BYTES
 
 RNG = np.random.default_rng(42)
 
@@ -278,6 +279,66 @@ class TestCMS:
         s = CMSSketch(1 << 8, 3).update_hashes(_hashes(500))
         s2 = MergeableSketch.from_bytes(s.to_bytes())
         assert np.array_equal(s.table, s2.table) and s2.total == s.total
+
+    MODE_AT = ENVELOPE_BYTES + 16  # the payload's mode byte, after width, depth, total
+
+    def test_few_keys_serialize_sparse(self):
+        # 300 keys x 5 rows = at most 1500 nonzero counters of 12 bytes
+        s = CMSSketch(1 << 16, 5).update_hashes(_hashes(300, seed=14), counts=np.arange(1, 301))
+        blob = s.to_bytes()
+        assert blob[self.MODE_AT] == 1
+        assert len(blob) < 0.01 * CMSSketch.wire_bytes_bound(width=1 << 16, depth=5)
+
+    def test_saturated_serializes_dense(self):
+        s = CMSSketch(1 << 6, 3).update_hashes(_hashes(10_000, seed=15))
+        blob = s.to_bytes()
+        assert blob[self.MODE_AT] == 0
+        assert len(blob) == CMSSketch.wire_bytes_bound(width=1 << 6, depth=3)
+
+    @pytest.mark.parametrize("width,n,mode", [(1 << 14, 200, 1), (1 << 6, 10_000, 0)])
+    def test_both_forms_roundtrip(self, width, n, mode):
+        s = CMSSketch(width, 3).update_hashes(_hashes(n, seed=16), counts=np.arange(n) - 7)
+        blob = s.to_bytes()
+        assert blob[self.MODE_AT] == mode
+        rt = MergeableSketch.from_bytes(blob)
+        assert isinstance(rt, CMSSketch) and (rt.width, rt.depth) == (width, 3)
+        assert np.array_equal(rt.table, s.table) and rt.total == s.total
+        rt.update_hashes(_hashes(5, seed=17))  # the read table is writable
+
+    def test_v1_blob_rejected(self):
+        import struct as _struct
+
+        from bloomfilter_multithread_spark.sketches.base import _HEADER, _MAGIC
+
+        payload = _struct.pack("<IIq", 8, 2, 0) + _struct.pack("<Q", 8 * 16) + b"\x00" * (8 * 16)
+        v1 = _HEADER.pack(_MAGIC, CMSSketch.KIND_ID, 1, len(payload)) + payload
+        with pytest.raises(ValueError, match="v1"):
+            MergeableSketch.from_bytes(v1)
+
+    def test_unknown_mode_rejected(self):
+        blob = bytearray(CMSSketch(1 << 4, 2).to_bytes())
+        blob[self.MODE_AT] = 7
+        with pytest.raises(ValueError, match="mode 7"):
+            MergeableSketch.from_bytes(bytes(blob))
+
+    def test_inner_product_exact_past_int64(self):
+        # one key counted 5e9: each row holds one counter of 5e9, whose
+        # square (2.5e19) is past the int64 range
+        a = CMSSketch(64, 3).update_hashes(_hashes(1, seed=18), counts=[5_000_000_000])
+        assert a.estimate_inner_product(a) == 5_000_000_000 ** 2
+        b = CMSSketch(64, 3).update_hashes(_hashes(1, seed=18), counts=[-5_000_000_000])
+        assert a.estimate_inner_product(b) == -(5_000_000_000 ** 2)
+
+    @pytest.mark.parametrize("width,depth,match", [
+        (0, 3, "width"),
+        (100, 3, "width"),
+        (64, 0, "depth"),
+        # raised before the 48 GiB table would be allocated
+        (1 << 31, 3, "2\\^32"),
+    ])
+    def test_misuse_rejected(self, width, depth, match):
+        with pytest.raises(ValueError, match=match):
+            CMSSketch(width, depth)
 
 
 # ---------------------------------------------------------------- kll / tdigest
@@ -740,6 +801,9 @@ class TestCBF:
         assert c.resident_nbytes() == (1 << 20) * 8
         b = BloomSketch(1 << 20, 4)
         assert b.resident_nbytes() == 1 << 20
+        cms = CMSSketch(1 << 14, 5).update_hashes(_hashes(10, seed=23))
+        assert len(cms.to_bytes()) < 2_000
+        assert MergeableSketch.from_bytes(cms.to_bytes()).resident_nbytes() == (1 << 14) * 5 * 8
         from bloomfilter_multithread_spark.sketches import KLLSketch
         assert KLLSketch.create().resident_nbytes() is None
 
