@@ -171,7 +171,8 @@ def running_distinct_per_key(stream_df: DataFrame, key_col: str, value_col: str,
     (key, n_turns, est_distinct) row per key per micro-batch.
 
     ``kind`` selects any registered hashed sketch with an ``estimate()``
-    (``"hll"`` p=12 → 4 KiB state/key; ``"kmv"`` k via ``params`` →
+    (``"hll"`` p=12 → ~2 KiB state/key once its registers fill, less
+    while the key has few distinct values; ``"kmv"`` k via ``params`` →
     k·8 B state/key and exact counts until saturation — pick per key
     cardinality budget). State stores the serialized envelope, so a
     restart resumes the exact sketch (version-checked by ``from_bytes``).

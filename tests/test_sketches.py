@@ -219,19 +219,152 @@ class TestHLL:
         s2 = MergeableSketch.from_bytes(blob)
         assert np.array_equal(s.registers, s2.registers) and s2.p == 14
 
+    MODE_AT = ENVELOPE_BYTES + 4  # the payload's mode byte, after p
+    BASE_AT = MODE_AT + 1  # dense-4's base register
+
+    @staticmethod
+    def _sizes(regs: np.ndarray) -> list[int]:
+        """Exact blob size of each form: dense-8, sparse, dense-4."""
+        m, base = regs.size, int(regs.min())
+        n_exc = int((regs >= base + 15).sum())
+        return [ENVELOPE_BYTES + 5 + 8 + m,
+                ENVELOPE_BYTES + 5 + 16 + 5 * int(np.count_nonzero(regs)),
+                ENVELOPE_BYTES + 6 + 24 + m // 2 + 5 * n_exc]
+
+    @staticmethod
+    def _blob(p: int, mode: int, *arrays, head: bytes = b"") -> bytes:
+        """A v2 blob laid out by hand: (p, mode) header, ``head``, then
+        each array with its 8-byte length prefix."""
+        import struct as _struct
+
+        from bloomfilter_multithread_spark.sketches.base import _HEADER, _MAGIC
+
+        payload = _struct.pack("<IB", p, mode) + head + b"".join(
+            _struct.pack("<Q", a.nbytes) + a.tobytes() for a in arrays)
+        return _HEADER.pack(_MAGIC, HLLSketch.KIND_ID, 2, len(payload)) + payload
+
     def test_dense_wire_used_when_full(self):
+        # ~100 values per register: every register is set and within 15
+        # of the smallest but for a few, so the nibble form is written
         s = HLLSketch(p=10).update_hashes(_hashes(100_000, seed=22))
-        assert len(s.to_bytes()) >= (1 << 10)  # dense mode kicks in
-        s2 = MergeableSketch.from_bytes(s.to_bytes())
+        blob = s.to_bytes()
+        n_exc = int((s.registers >= s.registers.min() + 15).sum())
+        assert blob[self.MODE_AT] == 2 and blob[self.BASE_AT] == s.registers.min()
+        assert len(blob) == ENVELOPE_BYTES + (1 << 10) // 2 + 30 + 5 * n_exc
+        s2 = MergeableSketch.from_bytes(blob)
         assert np.array_equal(s.registers, s2.registers)
 
+    def test_dense4_roundtrip_with_exceptions(self):
+        s = HLLSketch(p=12).update_hashes(_hashes(100_000, seed=25))
+        s.registers[[0, 1, 777, 4095]] = [40, 52, 41, 60]
+        blob = s.to_bytes()
+        n_exc = int((s.registers >= s.registers.min() + 15).sum())
+        assert n_exc >= 4 and blob[self.MODE_AT] == 2
+        assert len(blob) == ENVELOPE_BYTES + (1 << 12) // 2 + 30 + 5 * n_exc
+        assert np.array_equal(MergeableSketch.from_bytes(blob).registers, s.registers)
+
+    def test_dense4_roundtrip_with_base(self):
+        regs = np.random.default_rng(26).integers(3, 18, 1 << 11).astype(np.uint8)
+        blob = HLLSketch(p=11, registers=regs).to_bytes()
+        assert blob[self.MODE_AT] == 2 and blob[self.BASE_AT] == 3
+        assert np.array_equal(MergeableSketch.from_bytes(blob).registers, regs)
+
+    def test_many_exceptions_write_dense8(self):
+        # 15% of the registers are 20 above the rest: more exceptions
+        # than the nibbles save, so the byte-per-register form is smaller
+        regs = np.ones(1 << 12, dtype=np.uint8)
+        regs[np.random.default_rng(27).choice(regs.size, 614, replace=False)] = 21
+        blob = HLLSketch(p=12, registers=regs).to_bytes()
+        assert blob[self.MODE_AT] == 0 and len(blob) == self._sizes(regs)[0]
+        assert len(blob) <= HLLSketch.wire_bytes_bound(p=12)
+        assert np.array_equal(MergeableSketch.from_bytes(blob).registers, regs)
+
+    @pytest.mark.parametrize("p", [10, 12])
+    def test_written_form_is_the_smallest(self, p):
+        # nonzero counts around m/5 (sparse against a full form) and
+        # exception counts around m/10 (dense-4 against dense-8)
+        m, rng = 1 << p, np.random.default_rng(p)
+        sets = []
+        for nz in range(m // 5 - 8, m // 5 + 9):
+            regs = np.zeros(m, dtype=np.uint8)
+            regs[rng.choice(m, nz, replace=False)] = rng.integers(1, 30, nz)
+            sets.append(regs)
+        for n_exc in range(m // 10 - 8, m // 10 + 9):
+            regs = rng.integers(2, 16, m).astype(np.uint8)
+            regs[rng.choice(m, n_exc, replace=False)] = rng.integers(17, 40, n_exc)
+            sets.append(regs)
+        for regs in sets:
+            sizes = self._sizes(regs)
+            blob = HLLSketch(p=p, registers=regs).to_bytes()
+            assert len(blob) == min(sizes), (int(np.count_nonzero(regs)), sizes, len(blob))
+            assert blob[self.MODE_AT] == sizes.index(min(sizes))
+            assert np.array_equal(MergeableSketch.from_bytes(blob).registers, regs)
+
+    def test_dense8_and_sparse_layouts_decode(self):
+        # mode-0 and mode-1 blobs as a build without dense-4 writes them
+        rng = np.random.default_rng(28)
+        regs = rng.integers(0, 9, 1 << 10).astype(np.uint8)
+        dense = MergeableSketch.from_bytes(self._blob(10, 0, regs))
+        assert np.array_equal(dense.registers, regs)
+        idx = np.sort(rng.choice(1 << 10, 40, replace=False)).astype(np.int32)
+        vals = rng.integers(1, 9, 40).astype(np.uint8)
+        sparse = MergeableSketch.from_bytes(self._blob(10, 1, idx, vals))
+        want = np.zeros(1 << 10, dtype=np.uint8)
+        want[idx] = vals
+        assert np.array_equal(sparse.registers, want)
+
+    def test_unknown_mode_rejected(self):
+        blob = bytearray(HLLSketch(p=8).to_bytes())
+        blob[self.MODE_AT] = 3
+        with pytest.raises(ValueError, match="mode 3"):
+            MergeableSketch.from_bytes(bytes(blob))
+
+    def test_construct_wrong_register_count_rejected(self):
+        with pytest.raises(ValueError, match="4096 registers"):
+            HLLSketch(p=12, registers=np.zeros(7))
+
+    def test_dense_wrong_register_count_rejected(self):
+        with pytest.raises(ValueError, match="16384 registers"):
+            MergeableSketch.from_bytes(self._blob(14, 0, np.ones(100, dtype=np.uint8)))
+
+    @pytest.mark.parametrize("bucket", [-1, 5000])
+    def test_sparse_bucket_out_of_range_rejected(self, bucket):
+        blob = self._blob(10, 1, np.array([3, bucket], dtype=np.int32),
+                          np.array([2, 7], dtype=np.uint8))
+        with pytest.raises(ValueError, match="out of"):
+            MergeableSketch.from_bytes(blob)
+
+    def test_sparse_length_mismatch_rejected(self):
+        blob = self._blob(10, 1, np.array([3, 4, 5], dtype=np.int32),
+                          np.array([2], dtype=np.uint8))
+        with pytest.raises(ValueError, match="3 indices but 1 values"):
+            MergeableSketch.from_bytes(blob)
+
+    def test_dense4_malformed_rejected(self):
+        empty_i, empty_v = np.zeros(0, dtype=np.int32), np.zeros(0, dtype=np.uint8)
+        short = self._blob(10, 2, np.zeros(100, dtype=np.uint8), empty_i, empty_v, head=b"\x01")
+        with pytest.raises(ValueError, match="needs 1024"):
+            MergeableSketch.from_bytes(short)
+        nib = np.zeros(512, dtype=np.uint8)
+        far = self._blob(10, 2, nib, np.array([1024], dtype=np.int32),
+                         np.array([30], dtype=np.uint8), head=b"\x01")
+        with pytest.raises(ValueError, match="out of"):
+            MergeableSketch.from_bytes(far)
+        wrap = self._blob(10, 2, nib, empty_i, empty_v, head=b"\xfa")
+        with pytest.raises(ValueError, match="base 250"):
+            MergeableSketch.from_bytes(wrap)
+
     def test_sparse_dense_blobs_interoperate_in_merge(self):
-        # a sparse-serialized partial merged into a dense one must give
-        # the same registers as merging the in-memory sketches directly
+        # partials serialized in every form, merged through the wire, must
+        # give the same registers as merging the in-memory sketches directly
         small = HLLSketch(p=12).update_hashes(_hashes(30, seed=23))
         big = HLLSketch(p=12).update_hashes(_hashes(200_000, seed=24))
-        via_wire = MergeableSketch.from_bytes(big.to_bytes()).merge_bytes(small.to_bytes())
-        direct = big.copy().merge(small.copy())
+        skewed = HLLSketch(p=12).update_hashes(_hashes(20_000, seed=29))
+        skewed.registers[::5] = 40  # a fifth of the registers are exceptions
+        blobs = [big.to_bytes(), small.to_bytes(), skewed.to_bytes()]
+        assert [b[self.MODE_AT] for b in blobs] == [2, 1, 0]
+        via_wire = merge_all(blobs)
+        direct = big.copy().merge(small.copy()).merge(skewed.copy())
         assert np.array_equal(via_wire.registers, direct.registers)
 
     def test_v1_blob_rejected(self):
